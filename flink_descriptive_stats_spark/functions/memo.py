@@ -1,107 +1,164 @@
-"""Per-process memo for collected single-row aggregates.
+"""Per-process memo shared by the operators.
 
 Several operators end in "collect ONE row of aggregates, post-process
-driver-side" (profile, quantiles, outlier fences, distinct counts). When two
-queries need the same aggregate bundle over the same immutable input —
-jb_report after profile, outlier fences after quartiles — the second collect
-is pure repeat work. The memo is keyed by (session, analyzed-plan semantic
-hash, caller tag), so it hits only for semantically identical inputs within
-one process, and assumes batch inputs are immutable for the session — the
-standard batch-analytics contract (same assumption Spark's own cache()
-makes). Bounded FIFO; falls back to plain execution when a plan hash is
-unavailable.
+driver-side" (profile, quantiles, outlier fences, distinct counts); others
+build expression bundles, read a parquet footer, train a model or label
+near-duplicate clusters. When a second query needs the same result over the
+same input — jb_report after profile, a repeat profile of an unchanged
+file — that work is pure repeat. One ``Memo`` class serves every kind: a
+bounded LRU dict under one lock, one instance per kind of value.
+
+Each entry belongs to a session (data, schemas) or to the SparkContext
+(expression bundles), held by weakref, so it is never served to a new
+owner that reuses a dead one's id(). A data entry is keyed by the analyzed
+plan's semantic hash, the caller's tag and the (path, size, mtime_ns) of
+every input file (``DataFrame.inputFiles()``): the plan hash covers a
+file's path but not its contents, so without the file identity a file
+rewritten at the same path would be served stale. A lookup costs 6 + 2 per
+input file py4j calls and one ``os.stat`` per file. An input behind a
+non-``file:`` URI cannot be stat'ed: it gets no key and runs uncached, as
+does a plan whose hash is unavailable. Schemas key on the files under the
+table's path the same way.
+
+The lock guards dict operations only; ``build()`` (usually a Spark job)
+runs outside it, so clients sharing a session never wait on each other's
+jobs. Two threads that miss on one key both build; the later store wins.
 """
 
 from __future__ import annotations
 
+import os
+import threading
 import weakref
+from collections import OrderedDict
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame
 
-# key -> (session weakref, collected row). The weakref guards against id()
-# reuse: if the original session was torn down and a NEW session object
-# happens to land at the same address, the dead/mismatched ref invalidates
-# the entry instead of serving another session's (stale) aggregates.
-_MEMO: dict[tuple, tuple] = {}
-_MEMO_MAX = 128
+
+class Memo:
+    """Bounded LRU memo of values owned (by weakref) by a session or a
+    SparkContext. A cached list is returned as a copy, so callers may
+    extend it without changing the entry."""
+
+    def __init__(self, maxsize: int):
+        self.maxsize = maxsize
+        self._lock = threading.Lock()
+        self._data: OrderedDict = OrderedDict()
+
+    def peek(self, owner, key, default=None):
+        """The value cached for (owner, key), else ``default``."""
+        if key is None:
+            return default
+        k = (id(owner), key)
+        with self._lock:
+            hit = self._data.get(k)
+            if hit is None:
+                return default
+            if hit[0]() is not owner:   # owner gone, its id() reused
+                del self._data[k]
+                return default
+            self._data.move_to_end(k)
+        return list(hit[1]) if isinstance(hit[1], list) else hit[1]
+
+    def get(self, owner, key, build):
+        """The value cached for (owner, key), else build(), stored. A None
+        key (no sound identity for the input) runs build() uncached."""
+        value = self.peek(owner, key, self)     # self: the miss sentinel
+        if value is not self:
+            return value
+        value = build()
+        if key is not None:
+            with self._lock:
+                self._data[(id(owner), key)] = (weakref.ref(owner), value)
+                self._data.move_to_end((id(owner), key))
+                while len(self._data) > self.maxsize:
+                    self._data.popitem(last=False)
+        return list(value) if isinstance(value, list) else value
+
+    def clear(self) -> list:
+        """Drop every entry; return the values whose owner is alive."""
+        with self._lock:
+            entries = list(self._data.values())
+            self._data.clear()
+        return [v for ref, v in entries if ref() is not None]
+
+
+ROWS = Memo(128)        # collected aggregate rows
+EXPRS = Memo(512)       # built Column bundles: metadata, not data
+SCHEMAS = Memo(64)      # parquet footer schemas (sources/tables)
+MODELS = Memo(64)       # ANN centroid rows / codebooks (similarity)
+#: localCheckpoint-ed cluster labels (dedup); the bound caps how many
+#: frames keep their cached blocks pinned
+CLUSTERS = Memo(32)
 
 
 def clear_all_memos() -> None:
-    """Drop every per-process memo (stats rows here, cluster labels in
-    operators/dedup). Bench hygiene: a repeat timed pass must measure
-    execution, not the previous pass's memo hits. Cluster-label entries
-    are localCheckpoint-materialized DataFrames — unpersist their cached
-    blocks instead of leaving them to nondeterministic JVM GC."""
-    _MEMO.clear()
-    _EXPR_MEMO.clear()
-    from flink_descriptive_stats_spark.operators import dedup
-    for ref, df in dedup._CLUSTER_MEMO.values():
+    """Drop every per-process memo. Bench hygiene: a repeat timed pass must
+    measure execution, not the previous pass's memo hits. Cluster-label
+    entries are localCheckpoint-materialized DataFrames — unpersist their
+    cached blocks instead of leaving them to nondeterministic JVM GC."""
+    for cache in (ROWS, EXPRS, SCHEMAS, MODELS):
+        cache.clear()
+    for df in CLUSTERS.clear():
         try:
-            if ref() is not None:
-                df.unpersist()
+            df.unpersist()
         except Exception:
             pass            # session already stopped; blocks died with it
-    dedup._CLUSTER_MEMO.clear()
-    from flink_descriptive_stats_spark.operators import similarity
-    similarity._MODEL_MEMO.clear()
-    from flink_descriptive_stats_spark.sources import tables
-    tables._SCHEMA_MEMO.clear()
-    from flink_descriptive_stats_spark.operators import profile
-    profile._AGG_EXPR_MEMO.clear()
 
 
-#: session-keyed memo for BUILT Column expression bundles — metadata
-#: only (unresolved, immutable expression trees reusable across any
-#: DataFrame), never data. Building a big bundle costs hundreds of py4j
-#: round trips (text_stats_exprs measured 0.65s per build), re-paid by
-#: every query composing it; the memo pays it once per session+pass.
-_EXPR_MEMO: dict = {}
-_EXPR_MEMO_MAX = 512
+def files_identity(paths) -> tuple | None:
+    """Sorted (path, size, mtime_ns) of every file at or under each path;
+    None if a path is a non-``file:`` URI or does not exist."""
+    files = []
+    for p in paths:
+        u = urlparse(p)
+        if u.scheme not in ("", "file"):
+            return None
+        p = unquote(u.path) if u.scheme else p
+        if os.path.isdir(p):
+            files += [os.path.join(root, n)
+                      for root, _, names in os.walk(p) for n in names]
+        else:
+            files.append(p)
+    try:
+        stats = [(f, os.stat(f)) for f in files]
+    except OSError:
+        return None
+    return tuple(sorted((f, st.st_size, st.st_mtime_ns) for f, st in stats))
+
+
+def data_key(df: DataFrame, tag: tuple) -> tuple | None:
+    """(plan semantic hash, input-file identity, tag); None when the input
+    has no sound identity."""
+    try:
+        h = df._jdf.queryExecution().analyzed().semanticHash()
+        ident = files_identity(df.inputFiles())
+    except Exception:
+        return None
+    return None if ident is None else (h, ident, tag)
+
+
+def data_memoized(cache: Memo, df: DataFrame, tag: tuple, build):
+    """build(), memoized in ``cache`` per (session, input data, tag)."""
+    return cache.get(df.sparkSession, data_key(df, tag), build)
 
 
 def exprs_memoized(tag: tuple, build):
-    """Return build(), memoized per (active SparkContext, tag). Lists are
-    shallow-copied on return so callers may extend them safely."""
-    import weakref
-
+    """build(), memoized per (active SparkContext, tag)."""
     from pyspark import SparkContext
     sc = SparkContext._active_spark_context
-    if sc is None:
-        return build()
-    key = (id(sc), tag)
-    hit = _EXPR_MEMO.get(key)
-    if hit is not None and hit[0]() is sc:
-        out = hit[1]
-        return list(out) if isinstance(out, list) else out
-    out = build()
-    if len(_EXPR_MEMO) >= _EXPR_MEMO_MAX:
-        _EXPR_MEMO.pop(next(iter(_EXPR_MEMO)))
-    _EXPR_MEMO[key] = (weakref.ref(sc), out)
-    return list(out) if isinstance(out, list) else out
+    return build() if sc is None else EXPRS.get(sc, tag, build)
 
 
 def agg_row_memoized(df: DataFrame, agg_exprs: list[Column], tag: tuple):
-    """df.agg(*agg_exprs).collect()[0], memoized per (session, plan, tag).
+    """df.agg(*agg_exprs).collect()[0], memoized per (session, input data,
+    tag).
 
     ``tag`` must uniquely identify the aggregate bundle shape (caller name +
-    column list + parameters) — the plan hash covers only the INPUT."""
-    sess = df.sparkSession
-    try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-        key = (id(sess), h, tag)
-    except Exception:
-        key = None
-    if key is not None and key in _MEMO:
-        ref, row = _MEMO[key]
-        if ref() is sess:
-            return row
-        del _MEMO[key]          # dead or different session at this address
-    row = df.agg(*agg_exprs).collect()[0]
-    if key is not None:
-        if len(_MEMO) >= _MEMO_MAX:
-            _MEMO.pop(next(iter(_MEMO)))
-        _MEMO[key] = (weakref.ref(sess), row)
-    return row
+    column list + parameters) — the data key covers only the INPUT."""
+    return data_memoized(ROWS, df, tag,
+                         lambda: df.agg(*agg_exprs).collect()[0])
 
 
 def agg_row_peek(df: DataFrame, tag: tuple):
@@ -110,12 +167,4 @@ def agg_row_peek(df: DataFrame, tag: tuple):
     another operator already paid for it, but should run their own lean
     aggregate otherwise (e.g. schema_suggestions reading the profile's
     counters only when profile() already ran on this exact input)."""
-    sess = df.sparkSession
-    try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
-        return None
-    hit = _MEMO.get((id(sess), h, tag))
-    if hit is not None and hit[0]() is sess:
-        return hit[1]
-    return None
+    return ROWS.peek(df.sparkSession, data_key(df, tag))

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_descriptive_stats_spark.functions import hashing as H
+from flink_descriptive_stats_spark.functions.memo import CLUSTERS, data_memoized
 
 
 def exact_dedup(df: DataFrame, content_col: str = "text",
@@ -796,31 +797,6 @@ def embedding_near_dup_pairs_lsh(df: DataFrame, id_col: str = "vec_id",
     return _exact_cos_recheck(d, cand, threshold)
 
 
-# bounded per-process memo of cluster-label DataFrames (see
-# neardup_clusters); values are localCheckpoint-materialized so reuse is a
-# read of cached blocks, not a recomputation. Entries carry a session
-# weakref so id()-address reuse by a NEW session can't serve stale labels.
-_CLUSTER_MEMO: dict[tuple, tuple] = {}
-
-
-def _cluster_memo_put(key: tuple, sess, out: DataFrame) -> None:
-    import weakref
-    if len(_CLUSTER_MEMO) >= 32:
-        _CLUSTER_MEMO.pop(next(iter(_CLUSTER_MEMO)))
-    _CLUSTER_MEMO[key] = (weakref.ref(sess), out)
-
-
-def _cluster_memo_get(key: tuple, sess) -> DataFrame | None:
-    hit = _CLUSTER_MEMO.get(key)
-    if hit is None:
-        return None
-    ref, out = hit
-    if ref() is sess:
-        return out
-    del _CLUSTER_MEMO[key]
-    return None
-
-
 def _edge_signature(edges: DataFrame) -> tuple:
     """Cheap fixpoint signature of a DISTINCT edge set: (count, xor of
     xxhash64) — xor cannot overflow and is order-independent."""
@@ -921,27 +897,22 @@ def neardup_clusters(df: DataFrame, content_col: str = "text",
     # repeat clustering of the same input (dedup_corpus after
     # neardup_clusters, multiple consumers in one pipeline) returns the
     # already-computed labels instead of re-running pair generation + CC
-    try:
-        key = (id(df.sparkSession),
-               df._jdf.queryExecution().analyzed().semanticHash(),
-               (content_col, id_col, n, threshold, method))
-    except Exception:
-        key = None
-    if key is not None:
-        hit = _cluster_memo_get(key, df.sparkSession)
-        if hit is not None:
-            return hit
+    return data_memoized(
+        CLUSTERS, df, (content_col, id_col, n, threshold, method),
+        lambda: _neardup_clusters(df, content_col, id_col, n, threshold,
+                                  max_iter, method))
 
+
+def _neardup_clusters(df: DataFrame, content_col: str, id_col: str, n: int,
+                      threshold: float, max_iter: int,
+                      method: str) -> DataFrame:
     pairs = minhash_dedup_pairs(df, content_col, id_col, n, threshold)
     if method == "star":
         nodes = (df.where(F.col(content_col).isNotNull())
                  .select(F.col(id_col).alias("id")))
-        out = connected_components_star(
+        return connected_components_star(
             pairs.select(F.col("id_a").alias("u"),
                          F.col("id_b").alias("v")), nodes).localCheckpoint()
-        if key is not None:
-            _cluster_memo_put(key, df.sparkSession, out)
-        return out
     edges = (pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("t"))
              .union(pairs.select(F.col("id_b").alias("s"),
                                  F.col("id_a").alias("t"))))
@@ -964,10 +935,7 @@ def neardup_clusters(df: DataFrame, content_col: str = "text",
         labels = merged.drop("chg")
         if changed == 0:
             break
-    out = labels.select("id", F.col("comp").alias("cluster_id"))
-    if key is not None:
-        _cluster_memo_put(key, df.sparkSession, out)
-    return out
+    return labels.select("id", F.col("comp").alias("cluster_id"))
 
 
 def dedup_corpus(df: DataFrame, content_col: str = "text",

@@ -68,6 +68,11 @@ DISCOVER_DTYPES: tuple[str, ...] = ("tinyint", "smallint", "int", "bigint")
 APPROX_RSD = 0.05
 
 
+def _quoted(c: str) -> str:
+    """``c`` as a backtick-quoted identifier, safe for any column name."""
+    return "`" + c.replace("`", "``") + "`"
+
+
 def _key_cols(col) -> tuple[str, ...]:
     """Normalize a key spec: a column name, or a tuple/list of names
     for a COMPOSITE key (r11 — real schemas carry multi-column keys;
@@ -289,10 +294,11 @@ def fk_discover(tables: dict[str, DataFrame],
             continue
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in cols:
-            aggs += [F.count(F.col(c)).alias(f"{c}__nn"),
-                     distinct_of(F.col(c)).alias(f"{c}__d"),
-                     F.min(F.col(c)).cast("bigint").alias(f"{c}__mn"),
-                     F.max(F.col(c)).cast("bigint").alias(f"{c}__mx")]
+            x = F.col(_quoted(c))
+            aggs += [F.count(x).alias(f"{c}__nn"),
+                     distinct_of(x).alias(f"{c}__d"),
+                     F.min(x).cast("bigint").alias(f"{c}__mn"),
+                     F.max(x).cast("bigint").alias(f"{c}__mx")]
         stat_tables.append((tname, cols, df.agg(*aggs)))
     rows = run_concurrently(
         [lambda a=agg: a.collect()[0] for _, _, agg in stat_tables])
@@ -358,7 +364,11 @@ def _containment_union(spark, tables: dict[str, DataFrame],
     Each pair is (child_table, child_cols, parent_table, parent_cols,
     name_affinity); tables are passed as spark.sql DataFrame template
     args, so no temp-view namespace is touched."""
-    esc = (lambda s: s.replace("'", "''"))
+    # names are user data: escape the quote of their SQL context, and the
+    # braces spark.sql's template formatter would read as placeholders
+    brace = (lambda s: s.replace("{", "{{").replace("}", "}}"))
+    esc = (lambda s: brace(s.replace("'", "''")))
+    ident = (lambda c: brace(_quoted(c)))
     tkey = {tname: f"t{i}" for i, tname in enumerate(tables)}
     args: dict[str, DataFrame] = {}
     branches = []
@@ -366,10 +376,10 @@ def _containment_union(spark, tables: dict[str, DataFrame],
         args[tkey[ct]] = tables[ct]
         args[tkey[pt]] = tables[pt]
         ks = [f"__k{j}" for j in range(len(cpair))]
-        csel = ", ".join(f"`{c}` AS {k}" for c, k in zip(cpair, ks))
-        cnn = " AND ".join(f"`{c}` IS NOT NULL" for c in cpair)
-        psel = ", ".join(f"`{p}` AS {k}" for p, k in zip(ppair, ks))
-        pnn = " AND ".join(f"`{p}` IS NOT NULL" for p in ppair)
+        csel = ", ".join(f"{ident(c)} AS {k}" for c, k in zip(cpair, ks))
+        cnn = " AND ".join(f"{ident(c)} IS NOT NULL" for c in cpair)
+        psel = ", ".join(f"{ident(p)} AS {k}" for p, k in zip(ppair, ks))
+        pnn = " AND ".join(f"{ident(p)} IS NOT NULL" for p in ppair)
         branches.append(
             f"SELECT '{esc(ct)}' AS child_table, "
             f"'{esc(','.join(cpair))}' AS child_col, "
@@ -429,18 +439,17 @@ def _composite_pairs(tables: dict[str, DataFrame],
     for tname, pairs in sorted(by_table.items()):
         df = tables[tname]
         aggs = [F.count(F.lit(1)).alias("__n")]
-        for i, (a, b) in enumerate(pairs):
-            nn = F.count(F.when(F.col(a).isNotNull()
-                                & F.col(b).isNotNull(), 1))
+        for i, pair in enumerate(pairs):
+            a, b = (F.col(_quoted(c)) for c in pair)
+            nn = F.count(F.when(a.isNotNull() & b.isNotNull(), 1))
             # any-NULL-component pairs are no key value: mask them
             # BEFORE hashing (xxhash64 would otherwise hash the null
             # row to a real value and inflate the pair count — exact
             # count_distinct(a, b) skips such rows natively)
             d = (F.approx_count_distinct(
-                     F.when(F.col(a).isNotNull() & F.col(b).isNotNull(),
-                            F.xxhash64(F.col(a), F.col(b))),
+                     F.when(a.isNotNull() & b.isNotNull(), F.xxhash64(a, b)),
                      APPROX_RSD)
-                 if approx else F.count_distinct(F.col(a), F.col(b)))
+                 if approx else F.count_distinct(a, b))
             aggs += [nn.alias(f"p{i}__nn"), d.alias(f"p{i}__d")]
         pair_aggs.append((tname, pairs, df.agg(*aggs)))
     # independent per-table aggregates: overlap them (guide §2.6), fold

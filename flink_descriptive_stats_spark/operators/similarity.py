@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from flink_descriptive_stats_spark.functions.fsio import (
     get_fs, read_text_recovering, warn_non_atomic)
+from flink_descriptive_stats_spark.functions.memo import MODELS, data_memoized
 
 
 def with_norm(df: DataFrame, id_col: str = "vec_id",
@@ -277,41 +278,16 @@ def lsh_topk(df: DataFrame, k: int = 5, n_tables: int = 8,
             .where(F.col("rank") <= k))
 
 
-# Trained-model memo (bounded metadata: centroid rows / codebook arrays),
-# same contract as functions/memo.agg_row_memoized — keyed by (session id,
-# analyzed-plan semantic hash, params) with a weakref session guard, FIFO
-# bounded, cleared by memo.clear_all_memos. ann_ivf_kmeans / ann_pq /
-# ann_ivf_pq train on identical (input, params) pairs, so within one
-# process the Lloyd/PQ training runs ONCE and the searches share it —
+# Trained models (bounded metadata: centroid rows / codebook arrays) are
+# memoized per (session, input data, params) in memo.MODELS: ann_ivf_kmeans
+# / ann_pq / ann_ivf_pq train on identical (input, params) pairs, so within
+# one process the Lloyd/PQ training runs ONCE and the searches share it —
 # retraining per query was pure repeat work (training is deterministic).
-_MODEL_MEMO: dict[tuple, tuple] = {}
-
-
-def _model_memoized(df: DataFrame, params: tuple, build):
-    import weakref
-    sess = df.sparkSession
-    try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-        key = (id(sess), h, params)
-    except Exception:
-        key = None
-    if key is not None:
-        hit = _MODEL_MEMO.get(key)
-        if hit is not None and hit[0]() is sess:
-            return hit[1]
-    out = build()
-    if key is not None:
-        if len(_MODEL_MEMO) >= 64:
-            _MODEL_MEMO.pop(next(iter(_MODEL_MEMO)))
-        _MODEL_MEMO[key] = (weakref.ref(sess), out)
-    return out
-
-
 def kmeans_centroid_rows(df: DataFrame, n_cells: int = 16, iters: int = 2,
                          id_col: str = "vec_id",
                          vec_col: str = "embedding") -> list:
-    return _model_memoized(
-        df, ("kmeans", n_cells, iters, id_col, vec_col),
+    return data_memoized(
+        MODELS, df, ("kmeans", n_cells, iters, id_col, vec_col),
         lambda: _kmeans_centroid_rows(df, n_cells, iters, id_col, vec_col))
 
 
@@ -584,8 +560,9 @@ def embedding_drift(df_a: DataFrame, df_b: DataFrame,
 def pq_codebooks(df: DataFrame, m: int = 8, ksub: int = 16, iters: int = 5,
                  sample_mod: int = 0, id_col: str = "vec_id",
                  vec_col: str = "embedding", max_train: int = 1 << 16):
-    return _model_memoized(
-        df, ("pq", m, ksub, iters, sample_mod, id_col, vec_col, max_train),
+    return data_memoized(
+        MODELS, df,
+        ("pq", m, ksub, iters, sample_mod, id_col, vec_col, max_train),
         lambda: _pq_codebooks(df, m, ksub, iters, sample_mod, id_col,
                               vec_col, max_train))
 

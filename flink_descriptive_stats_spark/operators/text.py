@@ -570,7 +570,7 @@ def lm_score(df: DataFrame, text_col: str = "text",
     doc bigram stream joins the model on its (prev, next) key — model
     rows are vocabulary-scale, docs never shuffle whole — then one
     grouped per-doc aggregate. V (vocabulary size) is a 1-row exact
-    count collected as a plan literal."""
+    count that rides the same plan as a broadcast cross join."""
     from flink_descriptive_stats_spark.functions.sig import sig6
     toks = (df.where(F.col(text_col).isNotNull())
             .select(F.col(id_col).alias("id"),

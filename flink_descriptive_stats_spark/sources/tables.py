@@ -11,35 +11,24 @@ micros matches DuckDB's ns->ms truncation for the epoch-millis stats space.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: per-session parquet-footer schema memo: (session id, path) -> (session
-#: weakref, StructType). ``spark.read.parquet`` without a schema launches a
-#: footer-inference Spark job on EVERY call — pure fixed cost repeated for
-#: each of the ~300 table loads a full bench pass performs over the same
-#: handful of immutable fixture paths. Caching the SCHEMA (metadata only —
-#: exactly what a catalog/metastore provides at scale) and passing it to
-#: ``spark.read.schema(...)`` skips that job; the file listing itself stays
-#: fresh per call, so no data or result is ever reused. The weakref guards
-#: against id() reuse after a session teardown (same pattern as memo.py).
-_SCHEMA_MEMO: dict = {}
-_SCHEMA_MEMO_MAX = 64
+from flink_descriptive_stats_spark.functions.memo import (SCHEMAS,
+                                                          files_identity)
 
 
 def _parquet_schema(spark: SparkSession, path: str) -> T.StructType:
-    key = (id(spark), path)
-    hit = _SCHEMA_MEMO.get(key)
-    if hit is not None and hit[0]() is spark:
-        return hit[1]
-    schema = spark.read.parquet(path).schema
-    if len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_MAX:
-        _SCHEMA_MEMO.pop(next(iter(_SCHEMA_MEMO)))
-    _SCHEMA_MEMO[key] = (weakref.ref(spark), schema)
-    return schema
+    """The parquet footer schema at ``path``, memoized per (session, files
+    under the path). ``spark.read.parquet`` without a schema launches a
+    footer-inference Spark job on EVERY call; passing the memoized schema
+    to ``spark.read.schema(...)`` skips it. Only the schema (metadata, what
+    a catalog provides at scale) is reused; the file listing stays fresh
+    per call, and a rewritten file is a new key."""
+    ident = files_identity([path])
+    return SCHEMAS.get(spark, None if ident is None else (path, ident),
+                       lambda: spark.read.parquet(path).schema)
 
 
 def normalize_table(df: DataFrame, table: str) -> DataFrame:

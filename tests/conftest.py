@@ -3,14 +3,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-# The suite runs ~4000 stages against one JVM whose codegen-class cache is
-# deliberately large (session.py maxEntries=5000); the 250-column wide-
-# profile test then generates a multi-MB projection source on top of that
-# resident cache. 8g fits either alone but not both late in the suite —
-# give the test JVM headroom (the box has 128 GiB).
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(
+    __file__))))
 
 from flink_descriptive_stats_spark.session import get_spark  # noqa: E402
 

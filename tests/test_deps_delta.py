@@ -754,3 +754,14 @@ def test_delta_monitor_finalize_matches_batch(spark, tmp_path):
                                content_cols=("text", "doc_id"))
     with _pytest.raises(ValueError, match="no folded"):
         finalize_delta_monitor(old, sink, str(tmp_path / "nostate"))
+
+
+def test_fk_discover_backtick_identifiers(spark):
+    from flink_descriptive_stats_spark.operators import dependencies as DP
+    dim = spark.createDataFrame([(0,), (2,), (4,)], "`d``key` int")
+    fact = spark.createDataFrame([(0,), (1,), (2,)], "`f``{key}` int")
+    out = DP.fk_discover({"fact": fact, "dim": dim},
+                         min_containment=0.0).collect()
+    r = next(r for r in out if r["child_table"] == "fact")
+    assert (r["child_col"], r["parent_col"]) == ("f`{key}", "d`key")
+    assert r["n_child_distinct"] == 3 and r["n_orphans"] == 1

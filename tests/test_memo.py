@@ -28,3 +28,104 @@ def test_cluster_memo_reuse(spark):
     assert a is b                      # checkpointed labels reused
     rows = sorted(map(tuple, b.collect()))
     assert rows == [(0, 0), (1, 0), (2, 2)]
+
+
+def _write_parquet(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    pq.write_table(pa.table(cols), str(path))
+
+
+def _profile_x(df):
+    from flink_descriptive_stats_spark.operators.profile import profile
+    r = next(r for r in profile(df).collect() if r["column"] == "x")
+    return r["row_count"], r["mean"]
+
+
+def test_rewritten_file_is_not_served_stale(spark, tmp_path):
+    from flink_descriptive_stats_spark.functions.sig import sig6_py
+    from flink_descriptive_stats_spark.sources.tables import load_table
+    path = tmp_path / "t.parquet"
+    _write_parquet(path, x=[1, 2, 3])
+    assert _profile_x(load_table(spark, str(tmp_path), "t")) == (
+        3, sig6_py(2.0))
+    _write_parquet(path, x=[1, 2, 3, 4, 5])     # same path, new contents
+    assert _profile_x(load_table(spark, str(tmp_path), "t")) == (
+        5, sig6_py(3.0))
+
+
+def test_rewritten_file_schema_is_not_served_stale(spark, tmp_path):
+    from flink_descriptive_stats_spark.sources.tables import load_table
+    path = tmp_path / "t.parquet"
+    _write_parquet(path, x=[1, 2, 3])
+    assert load_table(spark, str(tmp_path), "t").columns == ["x"]
+    _write_parquet(path, x=[1, 2, 3], y=["a", "b", "c"])
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["x", "y"]
+    assert sorted(map(tuple, df.collect())) == [
+        (1, "a"), (2, "b"), (3, "c")]
+
+
+def test_non_local_input_runs_uncached():
+    assert memo.files_identity(["hdfs://nn/warehouse/t.parquet"]) is None
+    assert memo.files_identity(["/no/such/file.parquet"]) is None
+    owner = type("Owner", (), {})()
+    cache = memo.Memo(4)
+    builds = []
+    for _ in range(2):
+        cache.get(owner, None, lambda: builds.append(1))
+    assert len(builds) == 2
+
+
+def test_memo_lru_bound_and_list_copy():
+    owner = type("Owner", (), {})()
+    cache = memo.Memo(2)
+    a = cache.get(owner, "a", lambda: [1])
+    a.append(99)                       # caller mutation stays local
+    assert cache.get(owner, "a", lambda: [2]) == [1]
+    cache.get(owner, "b", lambda: [3])
+    cache.get(owner, "a", lambda: [4])  # touch: "b" is now least recent
+    cache.get(owner, "c", lambda: [5])
+    assert cache.peek(owner, "a") == [1]
+    assert cache.peek(owner, "b") is None
+    other = type("Owner", (), {})()
+    assert cache.peek(other, "a") is None
+
+
+def test_memo_threads_at_bound():
+    import sys
+    import threading
+    owner = type("Owner", (), {})()
+    cache = memo.Memo(8)
+    errors, wrong = [], []
+
+    def build(k):
+        return [k, k * k]
+
+    def hammer(seed):
+        try:
+            for i in range(3000):
+                k = (seed * 7 + i) % 24     # overlapping keys, 3x the bound
+                got = cache.get(owner, k, lambda: build(k))
+                if got != build(k):
+                    wrong.append((k, got))
+                if i % 5 == 0:
+                    peeked = cache.peek(owner, k)
+                    if peeked is not None and peeked != build(k):
+                        wrong.append((k, peeked))
+        except Exception as e:          # noqa: BLE001 — any raise fails
+            errors.append(e)
+
+    threads = [threading.Thread(target=hammer, args=(s,)) for s in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)         # switch threads mid-operation
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and wrong == []
+    assert len(cache._data) <= cache.maxsize
