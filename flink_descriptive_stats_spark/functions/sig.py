@@ -71,8 +71,8 @@ def sig6(c: Column) -> Column:
 def sig6_py(x: float | None) -> str | None:
     """Pure-Python mirror of :func:`sig6` (IEEE doubles == Python floats).
 
-    Used by the batch profile, which computes derived stats driver-side over
-    the collected 1-row aggregate. Decimal ROUND_HALF_UP on the exact binary
+    Used by operators that render statistics computed driver-side over a
+    collected aggregate row. Decimal ROUND_HALF_UP on the exact binary
     expansion reproduces both Spark's BigDecimal HALF_UP and C round()'s
     ties-away-from-zero behavior.
     """

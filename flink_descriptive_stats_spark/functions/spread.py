@@ -103,9 +103,6 @@ def spread(df: DataFrame, cols: list[str] | None = None,
     ``min_bytes``: skip the spread when the optimizer's size estimate is
     below this — for consumers whose per-byte work is too light to repay
     an exchange (see SPREAD_MIN_BYTES)."""
-    import os
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        return df           # ops knob: force the pure at-scale plans
     want = df.sparkSession.sparkContext.defaultParallelism
     if want <= 1:
         return df

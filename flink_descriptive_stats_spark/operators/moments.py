@@ -32,12 +32,22 @@ Derived statistics (closed-form over the aggregated row, StatsPojo.java:
   D10 Scott bin width = floor(3.49*stddev_pop*rowCount^(-1/3)) scaled by
       0.4/0.6/0.7 when ceil(popSkew) == 1/2/3 (uses ROW count, not numeric
       count — a reference quirk we replicate, ProfileJob.java:152-160).
+
+One finish (:func:`finish`) applies these Column expressions, then sig6,
+for every profile: the batch profile over a local relation of its melted
+aggregate row (Catalyst evaluates it while optimizing, so no Spark job
+runs), the windowed and grouped profiles over their per-group rows. There
+is no second, driver-side copy of the formulas; the DuckDB oracle is the
+independent reference.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from flink_descriptive_stats_spark.functions.memo import exprs_memoized
+from flink_descriptive_stats_spark.functions.sig import sig6
 
 # Raw aggregate slots computed inside the single-pass agg for one numeric
 # (widened-to-double) expression x. Everything else is derived post-agg.
@@ -148,69 +158,52 @@ DERIVED_STATS = ("mean", "var_pop", "var_samp", "stddev_pop", "stddev_samp",
                  "scott_bin_width")
 
 
-def derived_stats_py(n: int, row_count: int, mean, var_pop, var_samp,
-                     skew_raw, kurt_raw) -> dict[str, float | None]:
-    """Pure-Python mirror of :func:`derived_stats` (same formulas, same
-    operation order — Python floats are IEEE doubles, so results match the
-    Column expressions bit-for-bit). Used by the batch profile driver-side;
-    the Column form drives the streaming/windowed path."""
-    import math
+#: The raw moment slots :func:`finish` reads, besides numeric_count and
+#: row_count.
+MOMENT_SLOTS = ("mean", "var_pop", "var_samp", "skew_raw", "kurt_raw")
 
-    if n == 0:
-        return {s: None for s in DERIVED_STATS}
-    nd = float(n)
 
-    stddev_pop = math.sqrt(var_pop) if var_pop is not None else None
-    if var_pop == 0:
-        skew_pop, kurt_pop = 0.0, 0.0
-    else:
-        skew_pop = 0.0 if abs(skew_raw) < 1e-9 else skew_raw
-        kurt_pop = kurt_raw + 3.0
-    skew_samp = 0.0 if n == 1 else skew_pop * nd / (nd - 1)
-    kurt_samp = 0.0 if n == 1 else kurt_pop * nd / (nd - 1)
-    kurt_excess_samp = kurt_samp - 3.0
+def finish(raw: DataFrame, columns: list[str],
+           stats: tuple[str, ...]) -> DataFrame:
+    """The derived-statistics finish shared by every profile: ``raw`` ->
+    ``columns``, each name in ``stats`` sig6-rendered, every other name
+    passed through.
 
-    out: dict[str, float | None] = {
-        "mean": mean, "var_pop": var_pop,
-        "var_samp": var_samp if n >= 2 else None,
-        "stddev_pop": stddev_pop,
-        "stddev_samp": math.sqrt(var_samp) if n >= 2 else None,
-        "skew_pop": skew_pop, "skew_samp": skew_samp,
-        "kurt_pop": kurt_pop, "kurt_samp": kurt_samp,
-        "kurt_excess_pop": kurt_pop - 3.0,
-        "kurt_excess_samp": kurt_excess_samp,
-        "se_mean": None, "se_var": None, "se_stddev": None,
-        "se_skew": None, "se_kurt": None,
-        "jb_score": (nd / 6.0) * (skew_samp * skew_samp
-                                  + 0.25 * kurt_excess_samp * kurt_excess_samp),
-    }
-    if n >= 2:
-        s = math.sqrt(var_samp)
-        out["se_mean"] = s / math.sqrt(nd)
-        out["se_var"] = var_samp * math.sqrt(2.0 / (nd - 1))
-        out["se_stddev"] = s / math.sqrt(2 * (nd - 1))
-    if n >= 3:
-        se_skew_core = math.sqrt((6 * nd * (nd - 1))
-                                 / ((nd - 2) * (nd + 1) * (nd + 3)))
-        out["se_skew"] = se_skew_core
-        if n >= 4:
-            out["se_kurt"] = (2 * se_skew_core
-                              * math.sqrt((nd * nd - 1)
-                                          / ((nd - 3) * (nd + 5))))
+    ``raw`` holds one row per profiled (group, column) with the raw slots
+    ``numeric_count``, ``row_count`` and MOMENT_SLOTS. A name in ``stats``
+    is one of DERIVED_STATS, derived from those slots, or a raw double
+    column of ``raw`` rendered as it is (the batch profile's ``avg_len``).
 
-    base_width = float(math.floor(3.49 * stddev_pop
-                                  * float(row_count) ** (-1.0 / 3.0)))
-    skew_ceil = math.ceil(skew_pop)
-    if skew_ceil == 1:
-        scott = base_width * 0.4
-    elif skew_ceil == 2:
-        scott = base_width * 0.6
-    elif skew_ceil == 3:
-        scott = base_width * 0.7
-    else:
-        scott = base_width
-    out["scott_bin_width"] = scott
-    return out
+    Staged on purpose: an earlier version inlined sig6(derived_stats(...))
+    per source column inside the pre-explode structs, and since sig6
+    references its input ~7x and the derived trees nest when-chains inside
+    when-chains, the ANALYZED plan blew up combinatorially — Catalyst
+    optimization alone cost ~4.5s of driver CPU per planning at 3 columns.
+    Two small selects instead: derive (each tree appears ONCE, over plain
+    attribute refs) -> sig6 (duplicates only attribute refs). Catalyst keeps
+    the stages as separate Projects because the producer expressions are
+    non-cheap and multiply-referenced, so the tree never re-inlines; the
+    projections run over groups x columns rows, which is tiny at any scale.
+    Both stages are built once per SparkContext: a Column node costs a py4j
+    round trip, and the stages hold several hundred.
+    """
+    derive, render = exprs_memoized(
+        ("profile_finish", tuple(columns), stats),
+        lambda: _finish_stages(columns, stats))
+    return raw.select(*derive).select(*render)
+
+
+def _finish_stages(columns: list[str],
+                   stats: tuple[str, ...]) -> tuple[list, list]:
+    d = derived_stats(*[F.col(c) for c in (
+        "numeric_count", "row_count", *MOMENT_SLOTS)])
+    keep = [c for c in columns if c not in stats]
+    derive = ([F.col(c) for c in keep]
+              + [(d[s] if s in d else F.col(s)).alias(f"__d_{s}")
+                 for s in stats])
+    render = [sig6(F.col(f"__d_{c}")).alias(c) if c in stats else F.col(c)
+              for c in columns]
+    return derive, render
 
 
 # ---------------------------------------------------------------------------

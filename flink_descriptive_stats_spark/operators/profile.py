@@ -15,19 +15,21 @@ moves a single row of ~30*N_cols doubles per partition, no skew possible.
 Top-K frequent values/patterns (which genuinely need a grouped shuffle) live
 in ``operators/topk.py`` as one separate multiplexed job.
 
-Output: long format — one row per profiled column. Counts and min/max are
-exact (BIGINT / DOUBLE); FP-derived statistics are '%.6e' strings (see
+Output: long format — one row per profiled column, a local relation over
+the melted aggregate row with the derived statistics applied by
+``moments.finish``. Counts and min/max are exact (BIGINT / DOUBLE);
+FP-derived statistics are 7-significant-digit strings (see
 functions/sig.py for why).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_descriptive_stats_spark.functions import scalar
-from flink_descriptive_stats_spark.functions.sig import sig6_py
 from flink_descriptive_stats_spark.operators import moments
 
 # Long-format output schema (name, type) — fixed order, every profile row.
@@ -42,6 +44,15 @@ PROFILE_FIELDS = [
     ("long_count", "bigint"), ("float_count", "bigint"),
     ("double_count", "bigint"), ("date_count", "bigint"),
 ]
+
+_ARROW_TYPES = {"string": pa.string(), "bigint": pa.int64(),
+                "double": pa.float64()}
+# The melted aggregate row that moments.finish reads: PROFILE_FIELDS with
+# the raw moment slots in place of the derived statistics, avg_len unrendered.
+_RAW_SCHEMA = pa.schema(
+    [(n, pa.float64() if n == "avg_len" else _ARROW_TYPES[t])
+     for n, t in PROFILE_FIELDS if n not in moments.DERIVED_STATS]
+    + [(s, pa.float64()) for s in moments.MOMENT_SLOTS])
 
 
 def completeness_expr(df: DataFrame) -> Column:
@@ -101,17 +112,9 @@ def _build_agg_exprs_for_column(i: int, name: str,
             F.count_if(scalar.parses_int_expr(c)).alias(f"{p}int_count"),
             F.count_if(scalar.parses_long_expr(c)).alias(f"{p}long_count"),
             F.count_if(scalar.parses_float_expr(c)).alias(f"{p}float_count"),
-            F.count_if(scalar.parses_float_expr(c)).alias(f"{p}double_count"),
             F.count_if(scalar.parses_date_expr(c)).alias(f"{p}date_count"),
         ]
     return exprs
-
-
-def profile_schema() -> T.StructType:
-    type_map = {"string": T.StringType(), "bigint": T.LongType(),
-                "double": T.DoubleType()}
-    return T.StructType([T.StructField(name, type_map[ts], True)
-                         for name, ts in PROFILE_FIELDS])
 
 
 def profile(df: DataFrame, columns: list[str] | None = None,
@@ -119,14 +122,16 @@ def profile(df: DataFrame, columns: list[str] | None = None,
     """Profile every (selected) column of ``df`` in one aggregation pass.
 
     Execution shape: ONE Spark job — scan -> partial HashAggregate ->
-    single-row exchange -> final HashAggregate -> collect of one wide row.
-    The derived statistics (D1-D10) are closed-form scalar math over that
-    collected row (O(N_cols) floats), so they run driver-side via the
-    bit-exact Python mirrors in moments/sig — putting them in the plan as
-    per-column Column trees costs seconds of janino compilation (and blows
-    the 64KB codegen limit) to compute a dozen scalars "distributed". The
-    expression forms still exist (moments.derived_stats) and drive the
-    streaming/windowed variant, where there IS one result row per window.
+    single-row exchange -> final HashAggregate -> collect of one wide row
+    (memoized per input). That row is melted into a local relation, one
+    row per column, and ``moments.finish`` — the same finish as the
+    windowed and grouped profiles — derives D1-D10 and renders them with
+    sig6 as Column expressions over it. Spark's ConvertToLocalRelation rule
+    evaluates those projections, and a consumer's filter and projection
+    (jb_report), while it optimizes the plan: collecting the result runs
+    no Spark job and compiles no code. (Inside the aggregate plan, the
+    per-column derived trees would cost seconds of janino compilation and
+    blow the 64KB codegen limit.)
 
     Ultra-wide schemas: a single pass holds through a few hundred columns
     (a 250-column frame is plan-pinned to one exchange in
@@ -181,41 +186,34 @@ def profile(df: DataFrame, columns: list[str] | None = None,
             ("profile", tuple(f.name for _, f, _ in chunk)))
         row.update(r.asDict())
 
-    out_rows = []
+    # melt the row into one raw-slot record per column (double_count is the
+    # float_count slot: both are the Java-strict float parse)
+    recs = []
     for i, f in enumerate(fields):
         p = f"c{i}__"
-        has_numeric = scalar.numeric_expr(f.name, f.dataType) is not None
-        has_len = scalar.length_expr(f.name, f.dataType) is not None
+        has_numeric = f"{p}n" in row          # which slots the bundle has
+        has_len = f"{p}min_len" in row
         is_str = isinstance(f.dataType, T.StringType)
+        rec = {"column": f.name, "dtype": f.dataType.simpleString(),
+               "row_count": row["row_count"], "null_count": row[f"{p}nulls"],
+               "numeric_count": row[f"{p}n"] if has_numeric else 0,
+               "empty_count": row[f"{p}empty"] if is_str else None,
+               "min_val": row[f"{p}min"] if has_numeric else None,
+               "max_val": row[f"{p}max"] if has_numeric else None}
+        for names, present in (
+                (moments.MOMENT_SLOTS, has_numeric),
+                (("min_len", "max_len", "avg_len"), has_len),
+                (("bool_count", "int_count", "long_count", "float_count",
+                  "date_count"), is_str)):
+            rec.update((s, row[f"{p}{s}"] if present else None)
+                       for s in names)
+        rec["double_count"] = rec["float_count"]
+        recs.append(rec)
 
-        n = row[f"{p}n"] if has_numeric else 0
-        if has_numeric:
-            d = moments.derived_stats_py(
-                n, row["row_count"], row[f"{p}mean"], row[f"{p}var_pop"],
-                row[f"{p}var_samp"], row[f"{p}skew_raw"], row[f"{p}kurt_raw"])
-        else:
-            d = {s: None for s in moments.DERIVED_STATS}
-
-        rec = {
-            "column": f.name,
-            "dtype": f.dataType.simpleString(),
-            "row_count": row["row_count"],
-            "null_count": row[f"{p}nulls"],
-            "numeric_count": n,
-            "empty_count": row[f"{p}empty"] if is_str else None,
-            "min_val": row[f"{p}min"] if has_numeric else None,
-            "max_val": row[f"{p}max"] if has_numeric else None,
-            **{s: sig6_py(d[s]) for s in moments.DERIVED_STATS},
-            "min_len": row[f"{p}min_len"] if has_len else None,
-            "max_len": row[f"{p}max_len"] if has_len else None,
-            "avg_len": sig6_py(row[f"{p}avg_len"]) if has_len else None,
-        }
-        for cnt in ("bool_count", "int_count", "long_count",
-                    "float_count", "double_count", "date_count"):
-            rec[cnt] = row[f"{p}{cnt}"] if is_str else None
-        out_rows.append(tuple(rec[name] for name, _ in PROFILE_FIELDS))
-
-    return df.sparkSession.createDataFrame(out_rows, profile_schema())
+    raw = df.sparkSession.createDataFrame(
+        pa.Table.from_pylist(recs, schema=_RAW_SCHEMA))
+    return moments.finish(raw, [name for name, _ in PROFILE_FIELDS],
+                          moments.DERIVED_STATS + ("avg_len",))
 
 
 def complete_row_count(df: DataFrame) -> DataFrame:

@@ -10,17 +10,16 @@ same aggregate bundle runs under ``groupBy(window(ts, ...))`` unchanged:
   ``withWatermark`` for bounded state / late-data drop
 
 Window kinds: tumbling (slide=None), sliding (slide given), session
-(gap given -> session_window). Derived stats use the *expression* form
-(moments.derived_stats) because there is one result row per window — the
-driver-side shortcut used by the batch profile does not apply.
+(gap given -> session_window). Derived stats come from ``moments.finish``,
+the finish the batch profile uses too; here it runs inside the query plan,
+over one row per (window, column).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
-from flink_descriptive_stats_spark.functions.sig import sig6
 from flink_descriptive_stats_spark.operators import moments
 
 # Derived stats exposed per window — kept to the core set so the per-window
@@ -28,56 +27,42 @@ from flink_descriptive_stats_spark.operators import moments
 WINDOW_STATS = ("mean", "var_pop", "var_samp", "stddev_pop", "stddev_samp",
                 "skew_pop", "skew_samp", "kurt_pop", "kurt_samp", "jb_score")
 
-# Raw slot fields carried through the melt (post-agg, pre-derivation).
-_RAW_SLOTS = ("null_count", "n", "min", "max", "mean", "var_pop", "var_samp",
-              "skew_raw", "kurt_raw")
+# Fields after the group columns and ``column`` that the finish passes
+# through unrendered.
+_KEEP = ("row_count", "null_count", "numeric_count", "min_val", "max_val")
+# Aggregate slot -> the name moments.finish and _KEEP read it by.
+_SLOT_NAMES = {"null_count": "null_count", "n": "numeric_count",
+               "min": "min_val", "max": "max_val",
+               **{s: s for s in moments.MOMENT_SLOTS}}
 
 
-def _raw_struct(col_name: str, p: str) -> Column:
-    """Struct of RAW aggregate slots for one profiled column (no derived
-    stats here — see _finish_long for why)."""
-    return F.struct(F.lit(col_name).alias("column"),
-                    *[F.col(f"{p}{s}").alias(s) for s in _RAW_SLOTS])
+def _long_profile(grouped: GroupedData, lead: dict[str, Column],
+                  value_cols: list[str]) -> DataFrame:
+    """One aggregation pass of per-column moment bundles over ``grouped``,
+    melted AFTER aggregation (groups x columns rows, tiny at any input
+    scale) into one row per (group, column) and finished by
+    ``moments.finish``: the ``lead`` group columns (output name ->
+    expression over the aggregate), column, _KEEP, WINDOW_STATS."""
+    aggs = [F.count(F.lit(1)).alias("row_count")]
+    for i, c in enumerate(value_cols):
+        x = F.col(c).cast("double")
+        p = f"c{i}__"
+        aggs.append(F.count_if(x.isNull()).alias(f"{p}null_count"))
+        aggs += moments.numeric_agg_exprs(x, p)
+    structs = [F.struct(F.lit(c).alias("column"),
+                        *[F.col(f"c{i}__{s}").alias(name)
+                          for s, name in _SLOT_NAMES.items()])
+               for i, c in enumerate(value_cols)]
+    raw = grouped.agg(*aggs).select(*[c.alias(n) for n, c in lead.items()],
+                                    "row_count", F.inline(F.array(*structs)))
+    return moments.finish(raw, [*lead, "column", *_KEEP, *WINDOW_STATS],
+                          WINDOW_STATS)
 
 
-def _finish_long(melted: DataFrame, lead_cols: list[str]) -> DataFrame:
-    """Derive + sig6 over the melted (one row per group x column) frame.
-
-    Staged on purpose: an earlier version inlined sig6(derived_stats(...))
-    per source column inside the pre-explode structs, and since sig6
-    references its input ~7x and the derived trees nest when-chains inside
-    when-chains, the ANALYZED plan blew up combinatorially — Catalyst
-    optimization alone cost ~4.5s of driver CPU per planning at 3 columns
-    (the two slowest bench queries in round 2). Three small selects instead:
-    flatten raw slots -> derive (each tree appears ONCE, over plain
-    attribute refs) -> sig6 (duplicates only attribute refs). Catalyst keeps
-    the stages as separate Projects because the producer expressions are
-    non-cheap and multiply-referenced, so the tree never re-inlines; the
-    projections run over windows x columns rows, which is tiny at any scale.
-    """
-    flat = melted.select(
-        *lead_cols,
-        F.col("s.column").alias("column"),
-        "row_count",
-        F.col("s.null_count").alias("null_count"),
-        F.col("s.n").alias("numeric_count"),
-        F.col("s.min").alias("min_val"),
-        F.col("s.max").alias("max_val"),
-        F.col("s.mean").alias("__mean"),
-        F.col("s.var_pop").alias("__var_pop"),
-        F.col("s.var_samp").alias("__var_samp"),
-        F.col("s.skew_raw").alias("__skew_raw"),
-        F.col("s.kurt_raw").alias("__kurt_raw"))
-    d = moments.derived_stats(F.col("numeric_count"), F.col("row_count"),
-                              F.col("__mean"), F.col("__var_pop"),
-                              F.col("__var_samp"), F.col("__skew_raw"),
-                              F.col("__kurt_raw"))
-    keep = [*lead_cols, "column", "row_count", "null_count", "numeric_count",
-            "min_val", "max_val"]
-    staged = flat.select(*keep, *[d[s].alias(f"__d_{s}") for s in WINDOW_STATS])
-    return staged.select(*keep,
-                         *[sig6(F.col(f"__d_{s}")).alias(s)
-                           for s in WINDOW_STATS])
+def _window_bounds(extra_keys: list[str] = ()) -> dict[str, Column]:
+    return {"window_start": F.col("win.start"),
+            "window_end": F.col("win.end"),
+            **{k: F.col(k) for k in extra_keys}}
 
 
 def windowed_profile(df: DataFrame, ts_col: str = "ts",
@@ -97,33 +82,9 @@ def windowed_profile(df: DataFrame, ts_col: str = "ts",
         win = F.window(F.col(ts_col), window, slide)
     else:
         win = F.window(F.col(ts_col), window)
-
-    x = F.col(value_col).cast("double")
-    keys = [win.alias("win")] + [F.col(k) for k in (extra_keys or [])]
-    agg = df.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("row_count"),
-        F.count_if(x.isNull()).alias("null_count"),
-        *moments.numeric_agg_exprs(x, ""),
-    )
-
-    d = moments.derived_stats(F.col("n"), F.col("row_count"), F.col("mean"),
-                              F.col("var_pop"), F.col("var_samp"),
-                              F.col("skew_raw"), F.col("kurt_raw"))
-    keep = [F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            *[F.col(k) for k in (extra_keys or [])],
-            F.col("row_count"), F.col("null_count"),
-            F.col("n").alias("numeric_count"),
-            F.col("min").alias("min_val"), F.col("max").alias("max_val")]
-    keep_names = ["window_start", "window_end", *(extra_keys or []),
-                  "row_count", "null_count", "numeric_count",
-                  "min_val", "max_val"]
-    # staged derive -> sig6 (see _finish_long for the planning-cost rationale)
-    staged = agg.select(*keep,
-                        *[d[s].alias(f"__d_{s}") for s in WINDOW_STATS])
-    return staged.select(*keep_names,
-                         *[sig6(F.col(f"__d_{s}")).alias(s)
-                           for s in WINDOW_STATS])
+    return _long_profile(df.groupBy(win.alias("win"), *(extra_keys or [])),
+                         _window_bounds(extra_keys or []),
+                         [value_col]).drop("column")
 
 
 def windowed_profile_multi(df: DataFrame, ts_col: str = "ts",
@@ -137,7 +98,7 @@ def windowed_profile_multi(df: DataFrame, ts_col: str = "ts",
 
     Physical shape: one groupBy(window) carrying per-column moment bundles
     (map-side partial agg, exactly the batch profile's philosophy under a
-    window key), then an explode of per-column structs — the melt happens
+    window key), then an inline of per-column structs — the melt happens
     AFTER aggregation on windows x columns rows, which is tiny at any input
     scale."""
     from flink_descriptive_stats_spark.functions import scalar
@@ -147,21 +108,9 @@ def windowed_profile_multi(df: DataFrame, ts_col: str = "ts",
         value_cols = [f.name for f in df.schema.fields
                       if f.name != ts_col
                       and scalar.is_numeric_type(f.dataType)]
-    aggs = [F.count(F.lit(1)).alias("row_count")]
-    for i, c in enumerate(value_cols):
-        x = F.col(c).cast("double")
-        p = f"c{i}__"
-        aggs.append(F.count_if(x.isNull()).alias(f"{p}null_count"))
-        aggs += moments.numeric_agg_exprs(x, p)
-    agg = df.groupBy(F.window(F.col(ts_col), window).alias("win")).agg(*aggs)
-
-    melted = agg.select(F.col("win.start").alias("window_start"),
-                        F.col("win.end").alias("window_end"),
-                        F.col("row_count"),
-                        F.explode(F.array(
-                            *[_raw_struct(c, f"c{i}__")
-                              for i, c in enumerate(value_cols)])).alias("s"))
-    return _finish_long(melted, ["window_start", "window_end"])
+    return _long_profile(
+        df.groupBy(F.window(F.col(ts_col), window).alias("win")),
+        _window_bounds(), value_cols)
 
 
 def grouped_profile_multi(df: DataFrame, keys: list[str],
@@ -174,19 +123,8 @@ def grouped_profile_multi(df: DataFrame, keys: list[str],
         value_cols = [f.name for f in df.schema.fields
                       if f.name not in keys
                       and scalar.is_numeric_type(f.dataType)]
-    aggs = [F.count(F.lit(1)).alias("row_count")]
-    for i, c in enumerate(value_cols):
-        x = F.col(c).cast("double")
-        p = f"c{i}__"
-        aggs.append(F.count_if(x.isNull()).alias(f"{p}null_count"))
-        aggs += moments.numeric_agg_exprs(x, p)
-    agg = df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-
-    melted = agg.select(*[F.col(k) for k in keys], F.col("row_count"),
-                        F.explode(F.array(
-                            *[_raw_struct(c, f"c{i}__")
-                              for i, c in enumerate(value_cols)])).alias("s"))
-    return _finish_long(melted, list(keys))
+    return _long_profile(df.groupBy(*keys), {k: F.col(k) for k in keys},
+                         value_cols)
 
 
 def grouped_profile(df: DataFrame, keys: list[str],
@@ -195,26 +133,7 @@ def grouped_profile(df: DataFrame, keys: list[str],
     columns instead of a time window — per-group numeric profile in one
     partial+final aggregation pass (grouped analogue of the reference's
     whole-column profile; same moments, same derived statistics)."""
-    x = F.col(value_col).cast("double")
-    agg = df.groupBy(*[F.col(k) for k in keys]).agg(
-        F.count(F.lit(1)).alias("row_count"),
-        F.count_if(x.isNull()).alias("null_count"),
-        *moments.numeric_agg_exprs(x, ""),
-    )
-    d = moments.derived_stats(F.col("n"), F.col("row_count"), F.col("mean"),
-                              F.col("var_pop"), F.col("var_samp"),
-                              F.col("skew_raw"), F.col("kurt_raw"))
-    keep = [*[F.col(k) for k in keys],
-            F.col("row_count"), F.col("null_count"),
-            F.col("n").alias("numeric_count"),
-            F.col("min").alias("min_val"), F.col("max").alias("max_val")]
-    keep_names = [*keys, "row_count", "null_count", "numeric_count",
-                  "min_val", "max_val"]
-    staged = agg.select(*keep,
-                        *[d[s].alias(f"__d_{s}") for s in WINDOW_STATS])
-    return staged.select(*keep_names,
-                         *[sig6(F.col(f"__d_{s}")).alias(s)
-                           for s in WINDOW_STATS])
+    return grouped_profile_multi(df, keys, [value_col]).drop("column")
 
 
 def streaming_windowed_profile(spark, source_dir: str, schema,
