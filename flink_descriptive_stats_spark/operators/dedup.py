@@ -85,11 +85,6 @@ def shingle_hashes_long(df: DataFrame, content_col: str = "text",
     NULL-content rows are excluded (mirrored by the oracle's tokens CTE):
     a NULL document has no content to dedup by.
     """
-    # NO adaptive spread here (measured, optimization r13): unlike the
-    # span family, every consumer of this frame immediately shuffles
-    # (DF groupBys, distinct, min-aggregates), so the tokenize+hash
-    # work is light relative to an extra exchange — spreading measured
-    # minhash_calibration 2.28->3.10s, containment 2.25->2.56s
     toks = df.where(F.col(content_col).isNotNull()).select(
         F.col(id_col).alias("id"),
         H.tokens_expr(F.col(content_col)).alias("tk"))
@@ -1474,15 +1469,9 @@ def _span_base(df: DataFrame, text_col: str,
     """The shared narrow word/separator projection of the span family:
     (id, __text, __w words, __lead, __trail, __core internal
     separators) — one codegen Project over the scan."""
-    from flink_descriptive_stats_spark.functions.spread import spread
     t = F.col(text_col)
-    # adaptive input spread (guide §2.5): the regex splits here and the
-    # n-gram hashing above run fused into the scan stage — on a
-    # single-row-group corpus that is ONE core for the whole span
-    # family. The exchange carries only (id, text); no-op at scale.
-    narrow = spread(df.where(t.isNotNull())
-                    .select(F.col(id_col).alias("id"),
-                            t.alias("__text")), ["id"])
+    narrow = df.where(t.isNotNull()).select(F.col(id_col).alias("id"),
+                                            t.alias("__text"))
     t = F.col("__text")
     base = (narrow
             .select("id", "__text",

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from flink_descriptive_stats_spark.functions import scalar
 from flink_descriptive_stats_spark.functions.sig import sig6_py
-from flink_descriptive_stats_spark.functions.spread import spread
 
 QUARTILES = (0.25, 0.5, 0.75)
 
@@ -43,17 +42,6 @@ def _exact_stats_row(df: DataFrame, cols: list[str]):
     same input share a single percentile job instead of sorting each
     column's values twice."""
     from flink_descriptive_stats_spark.functions.memo import agg_row_memoized
-    from flink_descriptive_stats_spark.functions.spread import \
-        SPREAD_MIN_BYTES_PERCENTILE
-    # exact percentile's per-partition counts-map build is the CPU cost;
-    # project to the stat columns (guide §2.3 — only needed bytes cross
-    # the exchange; full-width spread measured SLOWER than no spread) and
-    # spread a deficiently-parallel input so the percentile build runs on
-    # every core (guide §2.5 — no-op on an already-parallel scan, and on
-    # inputs too small to repay the exchange). Memo keys on this plan
-    # consistently because every consumer routes through this one.
-    df = spread(df.select(*cols), cols,
-                min_bytes=SPREAD_MIN_BYTES_PERCENTILE)
     arr = F.array(*[F.lit(p) for p in QUARTILES])
     aggs = ([F.percentile(F.col(c), arr).alias(f"{c}__q") for c in cols]
             + [F.avg(F.col(c)).alias(f"{c}__mu") for c in cols]
@@ -87,16 +75,7 @@ def distinct_counts(df: DataFrame, columns: list[str] | None = None,
         exact = len(cols) <= EXACT_DISTINCT_MAX_COLUMNS
     if not exact:
         return approx_distinct_counts(df, columns=cols)
-    # spread before the Expand (r14, REVERSING the r13 revert): the
-    # Expand replicates every SCAN-partition row N_cols times, so on a
-    # single-row-group input the N-fold blowup AND its partial distinct
-    # aggregation run on ONE core. r13 measured 3.18 -> 3.65-4.08s and
-    # reverted, but an r14 alternating same-harness A/B (4 rounds)
-    # shows the spread winning every round: one-agg 2.40-3.32s vs
-    # spread 1.40-2.67s. count_distinct is exact integer arithmetic —
-    # no FP-order sensitivity; the exchange vanishes at scale as usual.
-    agg = (spread(df.select(*cols), cols)
-           .agg(*[F.count_distinct(F.col(c)).alias(c) for c in cols]))
+    agg = df.agg(*[F.count_distinct(F.col(c)).alias(c) for c in cols])
     row = agg.collect()[0]
     out = [(c, row[c]) for c in cols]
     return df.sparkSession.createDataFrame(out, "column string, distinct_count bigint")
@@ -131,12 +110,7 @@ def quantiles(df: DataFrame, columns: list[str] | None = None,
     else:
         fn = F.percentile if exact else F.percentile_approx
         arr = F.array(*[F.lit(p) for p in probs])
-        from flink_descriptive_stats_spark.functions.spread import \
-            SPREAD_MIN_BYTES_PERCENTILE
-        d = (spread(df.select(*cols), cols,
-                    min_bytes=SPREAD_MIN_BYTES_PERCENTILE)
-             if exact else df)
-        row = d.agg(*[fn(F.col(c), arr).alias(c) for c in cols]).collect()[0]
+        row = df.agg(*[fn(F.col(c), arr).alias(c) for c in cols]).collect()[0]
     out = [tuple([c] + ([None] * len(probs) if row[c] is None
                         else [sig6_py(v) for v in row[c]]))
            for c in cols]  # row[c] is NULL for an all-NULL column
@@ -1099,12 +1073,8 @@ def histogram_equidepth(df: DataFrame, column: str,
     probs = [i / buckets for i in range(1, buckets)]
     x = F.col(column).cast("double")
     # cutpoints AND min/max in ONE 1-row aggregate pass (they were two
-    # separate jobs; the boundary metadata should cost one scan), with
-    # the exact-percentile build spread like _exact_stats_row's
-    from flink_descriptive_stats_spark.functions.spread import (
-        SPREAD_MIN_BYTES_PERCENTILE, spread)
-    row = spread(df.select(column), [column],
-                 min_bytes=SPREAD_MIN_BYTES_PERCENTILE).agg(
+    # separate jobs; the boundary metadata should cost one scan)
+    row = df.agg(
         F.percentile(F.col(column), F.array(
             *[F.lit(p) for p in probs])).alias("qs"),
         F.min(x).alias("mn"), F.max(x).alias("mx")).collect()[0]
@@ -1387,15 +1357,7 @@ def robust_outlier_counts(df: DataFrame,
     meds = {c: (None if med_of[c] is None else float(sig6_py(med_of[c])))
             for c in cols}
     live = [c for c in cols if meds[c] is not None]
-    # the MAD percentile is the one remaining heavy pass: same narrow
-    # projection + adaptive spread as _exact_stats_row (guide §2.3/2.5);
-    # the cheap counting pass below stays on the raw scan — an exchange
-    # there measured slower than the single-task count
-    from flink_descriptive_stats_spark.functions.spread import \
-        SPREAD_MIN_BYTES_PERCENTILE
-    mad_in = spread(df.select(*live), live,
-                    min_bytes=SPREAD_MIN_BYTES_PERCENTILE) if live else df
-    mad_row = mad_in.agg(*[
+    mad_row = df.agg(*[
         F.percentile(F.abs(F.col(c).cast("double") - F.lit(meds[c])),
                      F.lit(0.5)).alias(c) for c in live]).collect()[0] \
         if live else {}
@@ -1657,26 +1619,25 @@ def schema_suggestions(df: DataFrame) -> DataFrame:
     counters cost, nothing more (an always-share design measured 50%
     SLOWER cold, and the gated query profiles a derived stringified
     frame that can never share)."""
+    import pyarrow as pa
     from pyspark.sql import types as T
     from flink_descriptive_stats_spark.functions.memo import (
         agg_row_memoized, agg_row_peek)
     from flink_descriptive_stats_spark.functions.sig import sig6_py
+
+    def local_frame(rows: list) -> DataFrame:
+        # an Arrow-built local relation: collecting it runs no Spark job
+        return df.sparkSession.createDataFrame(pa.Table.from_pylist(
+            rows, schema=pa.schema([
+                ("column", pa.string()), ("current_type", pa.string()),
+                ("suggested_type", pa.string()), ("n_non_null", pa.int64()),
+                ("parse_rate", pa.string())])))
+
     fields = list(df.schema.fields)
     cols = [(i, f.name) for i, f in enumerate(fields)
             if isinstance(f.dataType, T.StringType)]
     if not cols:
-        return df.sparkSession.createDataFrame(
-            [], "column string, current_type string, "
-                "suggested_type string, n_non_null bigint, "
-                "parse_rate string")
-    # spread with profile()'s exact parameters (all columns, same size
-    # guard) so the memoized profile row — registered under the spread
-    # plan since the input parallelization landed there — is still found
-    # by the peek, and the cold lean aggregate (string-parse count_ifs,
-    # the same per-byte-heavy shape as the profile) parallelizes too
-    from flink_descriptive_stats_spark.functions.spread import \
-        SPREAD_MIN_BYTES
-    df = spread(df, min_bytes=SPREAD_MIN_BYTES)
+        return local_frame([])
     prow = agg_row_peek(df, ("profile", tuple(f.name for f in fields)))
     if prow is not None:
         def col_counts(i, c):
@@ -1717,10 +1678,10 @@ def schema_suggestions(df: DataFrame) -> DataFrame:
             else:
                 best = max(k for _, k in counts)
                 rate = best / n
-        out.append((c, "string", suggested, n, sig6_py(rate)))
-    return df.sparkSession.createDataFrame(
-        out, "column string, current_type string, suggested_type string, "
-             "n_non_null bigint, parse_rate string")
+        out.append({"column": c, "current_type": "string",
+                    "suggested_type": suggested, "n_non_null": n,
+                    "parse_rate": sig6_py(rate)})
+    return local_frame(out)
 
 
 def histogram_log(df: DataFrame, column: str, bins: int = 10) -> DataFrame:
@@ -1854,10 +1815,7 @@ def key_candidates(df: DataFrame,
     for c in cols:
         aggs += [F.count(F.col(c)).alias(f"{c}__nn"),
                  F.count_distinct(F.col(c)).alias(f"{c}__d")]
-    # spread before the Expand — same evidence as distinct_counts (r14
-    # alternating A/B on this exact agg shape: plain 3.30-4.90s vs
-    # spread 1.71-3.05s per round); exact integer counts, no FP concern
-    row = spread(df.select(*cols), cols).agg(*aggs).collect()[0]
+    row = df.agg(*aggs).collect()[0]
     n = int(row["__n"])
     out = []
     for c in cols:

@@ -126,15 +126,8 @@ def extract_text(df: DataFrame, html_col: str = "html",
     """(id, text_extracted): the crawl-extraction stage. NULL-markup
     rows are out of scope (the NULL-text contract every text operator
     shares)."""
-    from flink_descriptive_stats_spark.functions.spread import spread
-    # adaptive input spread (guide §2.5): the extraction regex chain is
-    # the heaviest per-byte projection in the crawl path and otherwise
-    # runs fused into the (single-task, single-row-group) scan; the
-    # exchange carries (id, html) once and is a no-op at scale
-    return (spread(df.where(F.col(html_col).isNotNull())
-                   .select(F.col(id_col).alias("id"), F.col(html_col)),
-                   ["id"])
-            .select("id",
+    return (df.where(F.col(html_col).isNotNull())
+            .select(F.col(id_col).alias("id"),
                     extract_text_expr(F.col(html_col)).alias(out_col)))
 
 
@@ -144,13 +137,9 @@ def markup_density(df: DataFrame, html_col: str = "html",
     n_scripts) per document — the quality signal that says "this doc
     was mostly chrome": a markup_density near 1 with high n_links is
     the link-farm / boilerplate shape quality filters drop first."""
-    from flink_descriptive_stats_spark.functions.spread import spread
-    # same adaptive spread as extract_text: the density bundle evaluates
-    # the extraction inline, so it is just as regex-heavy per byte
-    return (spread(df.where(F.col(html_col).isNotNull())
-                   .select(F.col(id_col).alias("id"), F.col(html_col)),
-                   ["id"])
-            .select("id", *markup_density_exprs(html_col)))
+    return (df.where(F.col(html_col).isNotNull())
+            .select(F.col(id_col).alias("id"),
+                    *markup_density_exprs(html_col)))
 
 
 # --------------------------------------------------------------------------

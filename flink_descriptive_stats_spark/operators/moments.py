@@ -119,9 +119,11 @@ def derived_stats(n: Column, row_count: Column, mean: Column,
 
     # D10: Scott's-rule histogram bin width (ProfileJob.java:146-162); uses
     # the full row count and population skewness ceiling as in the reference.
-    base_width = F.floor(
+    # floor() casts to bigint, which turns NaN into 0: a NaN stddev stays NULL
+    # like the column's other moments.
+    base_width = F.when(F.isnan(stddev_pop), none).otherwise(F.floor(
         3.49 * stddev_pop * F.pow(row_count.cast("double"), F.lit(-1.0 / 3.0))
-    ).cast("double")
+    ).cast("double"))
     skew_ceil = F.ceil(skew_pop)
     scott = (F.when(skew_ceil == 1, base_width * 0.4)
              .when(skew_ceil == 2, base_width * 0.6)

@@ -147,16 +147,6 @@ def profile(df: DataFrame, columns: list[str] | None = None,
     Returns a long-format DataFrame, one row per column, schema
     ``PROFILE_FIELDS``.
     """
-    # scale-adaptive input parallelization (guide §2.5): a single-row-group
-    # table pins the whole parse-heavy aggregate to ONE task; spread() is a
-    # no-op whenever the scan is already parallel (the 100 TB case), so the
-    # single-pass design is unchanged at scale, and skips inputs too small
-    # to repay the exchange (the small TPC-H dims regressed without the
-    # guard). schema_suggestions peeks the memo with the same spread
-    # parameters, so the warm path still hits.
-    from flink_descriptive_stats_spark.functions.spread import (
-        SPREAD_MIN_BYTES, spread)
-    df = spread(df, min_bytes=SPREAD_MIN_BYTES)
     fields = [f for f in df.schema.fields
               if columns is None or f.name in columns]
 

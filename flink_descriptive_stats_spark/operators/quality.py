@@ -768,16 +768,8 @@ def _dataset_card_rows_single_pass(df: DataFrame, text_col: str,
         _canonical_expr
     from flink_descriptive_stats_spark.operators.text import (
         pii_exprs, predicted_lang_expr_for, text_stats_exprs)
-    from flink_descriptive_stats_spark.functions.spread import spread
     c = F.col(text_col)
-    # project to the two consumed columns BEFORE the adaptive spread
-    # (guide §2.3: only needed bytes cross the exchange — media cards
-    # hand this function a frame that also carries payload blobs), then
-    # spread so the regex/hash-heavy projection runs on every core
-    # rather than inside a single-row-group scan task (guide §2.5;
-    # no-op on an already-parallel 100 TB scan)
-    narrow = spread(df.where(c.isNotNull()).select(text_col, source_col))
-    per = (narrow
+    per = (df.where(c.isNotNull())
            .select(F.md5(c).alias("__h"),
                    F.md5(_canonical_expr(text_col)).alias("__hc"),
                    F.col(source_col).alias("__src"),

@@ -176,14 +176,8 @@ def text_stats(df: DataFrame, text_col: str = "text",
                id_col: str = "doc_id") -> DataFrame:
     """Per-doc text statistics + composite quality score. NULL-text rows
     are excluded (mirrored by the oracle's tokens CTE)."""
-    from flink_descriptive_stats_spark.functions.spread import spread
-    # adaptive input spread (guide §2.5): the regex bundle runs fused
-    # into the scan stage — single-core on a single-row-group corpus;
-    # no-op on an already-parallel scan
-    d = spread(df.where(F.col(text_col).isNotNull())
-               .select(F.col(id_col).alias("id"), F.col(text_col)),
-               ["id"])
-    return d.select("id", *text_stats_exprs(text_col))
+    return (df.where(F.col(text_col).isNotNull())
+            .select(F.col(id_col).alias("id"), *text_stats_exprs(text_col)))
 
 
 def text_stats_exprs(text_col: str = "text") -> list:
@@ -684,15 +678,10 @@ def readability(df: DataFrame, text_col: str = "text",
     c = F.col(text_col)
     # tokenize ONCE (a projection boundary; the word count and the
     # long-word filter both read the materialized array instead of
-    # re-running the extraction regex); adaptive input spread first
-    # (guide §2.5) so the regex counts run on every core — no-op on an
-    # already-parallel scan
-    from flink_descriptive_stats_spark.functions.spread import spread
-    base = (spread(df.where(c.isNotNull())
-                   .select(F.col(id_col).alias("id"), c.alias("__t")),
-                   ["id"])
-            .select("id", "__t", H.tokens_expr(F.col("__t"))
-                    .alias("__tk")))
+    # re-running the extraction regex)
+    base = (df.where(c.isNotNull())
+            .select(F.col(id_col).alias("id"), c.alias("__t"),
+                    H.tokens_expr(c).alias("__tk")))
     t = F.col("__t")
     words = F.size("__tk").cast("double")
     syll = F.size(F.regexp_extract_all(t, F.lit(VOWEL_GROUP_RE), 0)) \

@@ -3,10 +3,11 @@
 Reference shape: per string column, TWO serial sub-pipelines (word + pattern)
 each doing groupBy -> global sort at parallelism 1 -> first(20)
 (ProfileJob.java:183-216) — the declared bottleneck (BASELINE.md). Our shape
-is ONE multiplexed job for ALL string columns and BOTH token kinds:
+is ONE scan and ONE multiplexed job for ALL string columns and BOTH token
+kinds:
 
-  melt strings -> (column, token) rows
-  union value-kind + pattern-kind          (still one dataflow, no cache)
+  explode (kind, column, token) structs    <- two per string column:
+                                              the value and its pattern
   groupBy(kind, column, token).count()     <- the only full-data shuffle;
                                               map-side partial agg absorbs
                                               heavy hitters before shuffling
@@ -27,11 +28,12 @@ order is nondeterministic (SURVEY.md §2.6 item 6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_descriptive_stats_spark.functions import scalar
+from flink_descriptive_stats_spark.functions.memo import exprs_memoized
 
 
 def string_columns(df: DataFrame) -> list[str]:
@@ -40,7 +42,7 @@ def string_columns(df: DataFrame) -> list[str]:
 
 
 def topk_tokens(df: DataFrame, columns: list[str] | None = None,
-                k: int = 20, include_patterns: bool = True) -> DataFrame:
+                k: int = 20) -> DataFrame:
     """Top-K frequent values (kind='value') and character patterns
     (kind='pattern') per string column. Output: (kind, column, token, cnt,
     rank), rank 1-based by (cnt desc, token asc)."""
@@ -48,27 +50,29 @@ def topk_tokens(df: DataFrame, columns: list[str] | None = None,
     if not cols:
         raise ValueError("no string columns to profile")
 
-    # adaptive input spread (guide §2.5): the melt explode and the
-    # pattern/accent generation run fused into the scan stage — a
-    # single-row-group table pins them to one core; the exchange moves
-    # only the string columns and is a no-op on a parallel scan
-    from flink_descriptive_stats_spark.functions.spread import spread
-    base = spread(df.select(*cols), cols)
-    structs = [F.struct(F.lit(c).alias("column"),
-                        F.col(c).alias("token")) for c in cols]
-    stacked = (base.select(F.explode(F.array(*structs)).alias("s"))
-               .select("s.*")
-               .where(F.col("token").isNotNull()))  # P3: null filter
-
-    melted = stacked.select(F.lit("value").alias("kind"), "column", "token")
-    if include_patterns:
-        melted = melted.unionAll(
-            stacked.select(F.lit("pattern").alias("kind"), "column",
-                           scalar.pattern_expr(F.col("token")).alias("token")))
+    # built once per session and column list (memo.exprs_memoized): the
+    # two structs cost ~150 py4j round trips per column, ~70 of them for
+    # the pattern chain
+    melt = exprs_memoized(("topk_melt", tuple(cols)), lambda: _melt(cols))
+    melted = (df.select(*melt).select("s.*")
+              .where(F.col("token").isNotNull()))  # P3: null filter
 
     counts = melted.groupBy("kind", "column", "token").agg(
         F.count(F.lit(1)).alias("cnt"))
     return _rank_topk(counts, ["kind", "column"], k)
+
+
+def _melt(cols: list[str]) -> list[Column]:
+    """The one explode of both token kinds: per column, a (kind='value',
+    column, token) and a (kind='pattern', column, pattern(token)) struct."""
+    structs = []
+    for c in cols:
+        for kind, token in (("value", F.col(c)),
+                            ("pattern", scalar.pattern_expr(F.col(c)))):
+            structs.append(F.struct(F.lit(kind).alias("kind"),
+                                    F.lit(c).alias("column"),
+                                    token.alias("token")))
+    return [F.explode(F.array(*structs)).alias("s")]
 
 
 def topk_as_maps(df: DataFrame, columns: list[str] | None = None,

@@ -38,24 +38,24 @@ def normalize_table(df: DataFrame, table: str) -> DataFrame:
     (TIMESTAMP(NANOS) read as long under the legacy conf, TIMESTAMP_NTZ,
     plain TIMESTAMP(MICROS)); this is the single place that maps whatever
     the parquet footer says onto the logical TimestampType the operators
-    expect. Works on both batch and streaming DataFrames (pure select).
+    expect. Works on both batch and streaming DataFrames; only the columns
+    that need converting are replaced (one ``withColumns``, column order
+    kept), and a frame that needs none is returned as it is.
     """
     from flink_descriptive_stats_spark.oracle import TABLE_SCHEMAS
     expected = dict(TABLE_SCHEMAS.get(table, []))
-    cols = []
+    converted = {}
     for f in df.schema.fields:
         if expected.get(f.name) == "timestamp" and isinstance(f.dataType, T.LongType):
             # nanos-as-long: integer division (nanos exceed double's 53-bit
             # mantissa, FP division would corrupt timestamps)
-            cols.append(F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
-                        .alias(f.name))
+            converted[f.name] = F.timestamp_micros(
+                F.expr(f"`{f.name}` div 1000"))
         elif isinstance(f.dataType, T.TimestampNTZType):
             # Session TZ is pinned to UTC, so NTZ wall time == the UTC
             # instant; normalizing to TimestampType keeps one code path.
-            cols.append(F.col(f.name).cast("timestamp").alias(f.name))
-        else:
-            cols.append(F.col(f.name))
-    return df.select(*cols)
+            converted[f.name] = F.col(f.name).cast("timestamp")
+    return df.withColumns(converted) if converted else df
 
 
 def load_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:

@@ -34,9 +34,11 @@ def test_profile_agg_single_pass(spark):
 
 
 def test_topk_pruned_scan_and_group_limit(spark):
-    """Top-K invariants: parquet scan reads ONLY the string columns
-    (column pruning reaches the reader) and WindowGroupLimit bounds the
-    final window's input (rank-limit pushdown, the no-salting rationale)."""
+    """Top-K invariants: ONE parquet scan (both token kinds come from one
+    explode, not a union of two branches), reading ONLY the string
+    columns (column pruning reaches the reader), with no input
+    repartition ahead of it, and WindowGroupLimit bounds the final
+    window's input (rank-limit pushdown, the no-salting rationale)."""
     li = load_table(spark, SF_DIR, "lineitem")
     plan = _formatted_plan(topk.topk_tokens(li))
     import re
@@ -44,6 +46,8 @@ def test_topk_pruned_scan_and_group_limit(spark):
     assert m, plan
     read_cols = {c.split(":")[0] for c in m.group(1).split(",")}
     assert read_cols == {"l_returnflag", "l_linestatus"}
+    assert plan.count("Scan parquet") == 2, plan   # one scan (tree+detail)
+    assert "xxhash64" not in plan, plan
     # two WindowGroupLimit nodes (Partial before the exchange + Final),
     # each listed twice in formatted mode (tree + detail section)
     assert plan.count("WindowGroupLimit") >= 4, plan
@@ -519,11 +523,9 @@ def test_markup_extraction_narrow_codegen(spark):
     """Markup extraction (r10) is a pure narrow map: no Python/Arrow
     node — the whole regex/entity/collapse pipeline stays inside
     whole-stage codegen, and the density variant evaluates the
-    extraction inline (one scan, one Project). The r13 optimization
-    round adds the adaptive input spread: a deficiently-parallel scan
-    (this fixture: one row group) gets exactly ONE narrow exchange of
-    (id, html) below the extraction; an already-parallel input gets
-    NONE (the 100 TB shape — spread() is a no-op there)."""
+    extraction inline (one scan, one Project). The shape is the same
+    whether the input is one row group (this fixture) or already
+    parallel: no exchange below or above the extraction."""
     from flink_descriptive_stats_spark.operators import markup as M
     docs = load_table(spark, SF_DIR, "documents")
     html = docs.where(F.col("text").isNotNull()).select(
@@ -531,15 +533,13 @@ def test_markup_extraction_narrow_codegen(spark):
         M.synth_html_expr(F.col("text"), F.col("doc_id")).alias("html"))
     for df in (M.extract_text(html), M.markup_density(html)):
         plan = _formatted_plan(df)
-        # exactly the one adaptive-spread exchange (tree + detail), keyed
-        # by the deterministic hash, BELOW the extraction projection
-        assert plan.count("Exchange") == 2
-        assert "xxhash64" in plan
+        assert "xxhash64" not in plan
+        assert "Exchange" not in plan
+        assert "* Project" in plan            # codegen'd (the * marker)
         assert "ArrowEval" not in plan and "BatchEval" not in plan
         assert plan.count("Scan parquet") == 2    # one scan (tree+detail)
     # already-parallel input (lineage cut so no exchange remains in the
-    # plan): the spread must disappear entirely and the extraction stays
-    # one codegen'd narrow Project — the 100 TB shape
+    # plan): the extraction stays one codegen'd narrow Project
     par = (html.repartition(spark.sparkContext.defaultParallelism,
                             "doc_id").localCheckpoint())
     for df in (M.extract_text(par), M.markup_density(par)):

@@ -8,6 +8,7 @@ import datetime as dt
 import numpy as np
 from pyspark.sql import types as T
 
+from flink_descriptive_stats_spark.operators.extras import schema_suggestions
 from flink_descriptive_stats_spark.operators.profile import profile
 from flink_descriptive_stats_spark.report import jb_report
 from flink_descriptive_stats_spark.streaming.profile_stream import (
@@ -30,6 +31,8 @@ def test_memoized_profile_and_jb_report_run_no_job(spark, tmp_path):
         prof = profile(df)
         rows = {r["column"]: r for r in prof.collect()}
         jb = jb_report(prof).collect()
+        # the lean type-suggestion aggregate peeks the same memoized row
+        suggestions = schema_suggestions(df).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)   # leave no group
     assert sc.statusTracker().getJobIdsForGroup("profile-finish-warm") == []
@@ -40,6 +43,7 @@ def test_memoized_profile_and_jb_report_run_no_job(spark, tmp_path):
     assert rows["x"]["mean"] == "4166667e-6"
     assert rows["s"]["float_count"] == rows["s"]["double_count"] == 1
     assert [r["column"] for r in jb] == ["x"]
+    assert [(r["column"], r["n_non_null"]) for r in suggestions] == [("s", 3)]
 
 
 def test_batch_and_windowed_profiles_agree(spark):
@@ -72,3 +76,24 @@ def test_batch_and_windowed_profiles_agree(spark):
                 == {f: win[c][f] for f in shared}), c
     assert batch["none"]["mean"] is None and batch["one"]["var_samp"] is None
     assert batch["const"]["skew_pop"] == "0e0"
+
+
+def test_nan_column_derived_stats_are_null(spark):
+    """A column holding NaN has NaN moments: every derived statistic,
+    Scott's bin width included, renders NULL (Spark's floor of NaN cast
+    to bigint is 0, which once rendered the width as 0e0), and the batch
+    and windowed profiles agree."""
+    t0 = dt.datetime(2024, 1, 1)
+    schema = T.StructType([T.StructField("ts", T.TimestampType()),
+                           T.StructField("x", T.DoubleType())])
+    df = spark.createDataFrame(
+        [(t0 + dt.timedelta(minutes=i), v)
+         for i, v in enumerate([1.0, float("nan"), 3.0])], schema)
+
+    batch = profile(df, ["x"]).collect()[0]
+    win = windowed_profile_multi(df, value_cols=["x"],
+                                 window="1 day").collect()[0]
+    assert batch["numeric_count"] == win["numeric_count"] == 3
+    assert batch["scott_bin_width"] is None
+    for f in WINDOW_STATS:
+        assert batch[f] is None and win[f] is None, f
