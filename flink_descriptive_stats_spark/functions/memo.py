@@ -2,14 +2,14 @@
 
 Several operators end in "collect ONE row of aggregates, post-process
 driver-side" (profile, quantiles, outlier fences, distinct counts); others
-build expression bundles, read a parquet footer, train a model or label
-near-duplicate clusters. When a second query needs the same result over the
+build a Column, read a parquet footer, train a model or label near-duplicate
+clusters. When a second query needs the same result over the
 same input — jb_report after profile, a repeat profile of an unchanged
 file — that work is pure repeat. One ``Memo`` class serves every kind: a
 bounded LRU dict under one lock, one instance per kind of value.
 
 Each entry belongs to a session (data, schemas) or to the SparkContext
-(expression bundles), held by weakref, so it is never served to a new
+(Columns), held by weakref, so it is never served to a new
 owner that reuses a dead one's id(). A data entry is keyed by the analyzed
 plan's semantic hash, the caller's tag and the (path, size, mtime_ns) of
 every input file (``DataFrame.inputFiles()``): the plan hash covers a
@@ -85,7 +85,9 @@ class Memo:
 
 
 ROWS = Memo(128)        # collected aggregate rows
-EXPRS = Memo(512)       # built Column bundles: metadata, not data
+#: built Columns (one py4j round trip per node; SQL text needs no memo):
+#: the F2 pandas-UDF length (functions.scalar) and operators.text's bundles
+EXPRS = Memo(512)
 SCHEMAS = Memo(64)      # parquet footer schemas (sources/tables)
 MODELS = Memo(64)       # ANN centroid rows / codebooks (similarity)
 #: localCheckpoint-ed cluster labels (dedup); the bound caps how many
@@ -145,7 +147,8 @@ def data_memoized(cache: Memo, df: DataFrame, tag: tuple, build):
 
 
 def exprs_memoized(tag: tuple, build):
-    """build(), memoized per (active SparkContext, tag)."""
+    """build() (a Column or Column list), memoized per (active
+    SparkContext, tag)."""
     from pyspark import SparkContext
     sc = SparkContext._active_spark_context
     return build() if sc is None else EXPRS.get(sc, tag, build)

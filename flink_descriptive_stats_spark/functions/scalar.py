@@ -1,9 +1,13 @@
 """Scalar expression layer (F1-F7 in SURVEY.md §2.2).
 
-Every function here exists in two synchronized forms:
-- a Spark ``Column`` builder (built-in JVM expressions only — no Python UDFs
-  in the hot path; everything stays inside whole-stage codegen), and
-- a DuckDB SQL fragment builder (``duck_*``) used by the correctness oracle.
+Every function here exists in two synchronized forms, SQL text over a SQL
+expression argument: a Spark SQL fragment (built-in JVM expressions only,
+inside whole-stage codegen; applied with ``selectExpr`` / ``F.expr``, a few
+py4j round trips where a ``Column`` tree costs one per node) and a DuckDB
+fragment (``duck_*``) for the correctness oracle. The one ``Column`` is the
+float/double display length (F2), a pandas UDF (:func:`fp_length_col`).
+Spark SQL identifiers go through :func:`ident`, literals through
+:func:`sql_str`.
 
 Reference semantics being modeled (file:line cites into /root/reference):
 - F1 numeric widening          CastUtils.java:47-65
@@ -32,6 +36,22 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_descriptive_stats_spark.functions.memo import exprs_memoized
+
+
+def ident(name: str) -> str:
+    """``name`` as a Spark SQL identifier: backticked, with every backtick
+    inside it doubled (so ``a.b`` is one column, not a struct field)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal. Spark unescapes backslash
+    sequences in literals (``\\.`` would reach a regex as ``.``), so
+    backslashes and quotes are escaped."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 # --------------------------------------------------------------------------
 # type classification (F1)
 # --------------------------------------------------------------------------
@@ -45,12 +65,8 @@ def is_numeric_type(dt: T.DataType) -> bool:
     return isinstance(dt, _NUMERIC_TYPES)
 
 
-def is_temporal_type(dt: T.DataType) -> bool:
-    return isinstance(dt, (T.DateType, T.TimestampType, T.TimestampNTZType))
-
-
-def numeric_expr(name: str, dt: T.DataType) -> Column | None:
-    """F1: widen a column to DOUBLE for moment statistics.
+def numeric_expr(x: str, dt: T.DataType) -> str | None:
+    """F1: widen ``x`` (of type ``dt``) to DOUBLE for moment statistics.
 
     Numerics cast to double; dates/timestamps become epoch *milliseconds*
     (the reference runs numeric stats in epoch-millis space,
@@ -58,15 +74,14 @@ def numeric_expr(name: str, dt: T.DataType) -> Column | None:
     BigDecimal support is an improvement — the reference would throw
     (CastUtils.java:64).
     """
-    c = F.col(name)
     if is_numeric_type(dt):
-        return c.cast("double")
+        return f"CAST({x} AS DOUBLE)"
     if isinstance(dt, T.DateType):
-        return (F.unix_date(c).cast("double") * F.lit(86400000.0))
+        return f"(CAST(unix_date({x}) AS DOUBLE) * 86400000.0D)"
     if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
         # NTZ wall time is interpreted as UTC (session TZ is pinned to UTC),
         # matching DuckDB's naive-timestamp epoch semantics.
-        return F.unix_millis(c.cast("timestamp")).cast("double")
+        return f"CAST(unix_millis(CAST({x} AS TIMESTAMP)) AS DOUBLE)"
     return None
 
 
@@ -103,9 +118,10 @@ def fp_display_len_py(v: float | None, sig: int) -> int | None:
     return len(str(d).replace("E+", "E"))
 
 
-def _fp_length_expr(c: Column, sig: int) -> Column:
-    """Length of the Calcite scientific rendering of a float/double
-    (CastUtils.getFloatAsStr/getDoubleAsStr, StatsPojo.java:422-427):
+def fp_length_col(name: str, dt: T.DataType) -> Column:
+    """F2 for a float/double column ``name``: the length of the Calcite
+    scientific rendering (CastUtils.getFloatAsStr/getDoubleAsStr,
+    StatsPojo.java:422-427):
     BigDecimal(x, {DECIMAL32|DECIMAL64}).stripTrailingZeros().toString()
     with "E+" -> "E"; NaN renders "" (length 0), +-0 renders "0E0".
 
@@ -121,22 +137,28 @@ def _fp_length_expr(c: Column, sig: int) -> Column:
 
     NULL handling stays JVM-side (Arrow folds NULL and NaN together in a
     float64 batch; the reference distinguishes them — null -> no length,
-    NaN -> 0)."""
-    @F.pandas_udf("int")
-    def fp_len(s: pd.Series) -> pd.Series:
-        # memoize per distinct value: real columns repeat heavily
-        # (quantities, discounts, rates), making the batch ~free; the
-        # worst case (all-distinct) degrades to one render per row
-        m = {v: fp_display_len_py(v, sig) for v in s.dropna().unique()}
-        out = s.map(m)
-        out[s.isna()] = 0   # true NaN renders ""; real NULLs handled JVM-side
-        return out.astype("Int32")
+    NaN -> 0). A Python UDF has no SQL text, so this is a Column, memoized
+    per SparkContext: building it costs dozens of py4j round trips."""
+    sig = 7 if isinstance(dt, T.FloatType) else 16  # MathContext.DECIMAL32/64
 
-    return (F.when(c.isNull(), F.lit(None).cast("int"))
-            .otherwise(fp_len(c.cast("double"))))
+    def build() -> Column:
+        @F.pandas_udf("int")
+        def fp_len(s: pd.Series) -> pd.Series:
+            # memoize per distinct value: real columns repeat heavily
+            # (quantities, discounts, rates), making the batch ~free; the
+            # worst case (all-distinct) degrades to one render per row
+            m = {v: fp_display_len_py(v, sig) for v in s.dropna().unique()}
+            out = s.map(m)
+            out[s.isna()] = 0   # true NaN renders ""; NULLs handled JVM-side
+            return out.astype("Int32")
+
+        c = F.col(ident(name))
+        return (F.when(c.isNull(), F.lit(None).cast("int"))
+                .otherwise(fp_len(c.cast("double"))))
+    return exprs_memoized(("fp_length", name, sig), build)
 
 
-def _decimal_length_expr(c: Column, scale: int) -> Column:
+def _decimal_length_expr(x: str, scale: int) -> str:
     """DecimalType display length (StatsPojo.java:428-430 /
     getBigDecimalAsStr = BigDecimal.toString() with ONE leading zero
     stripped: "0.50" -> ".50", "-0.50" -> "-.50"; the "0"-valued decimal at
@@ -153,47 +175,47 @@ def _decimal_length_expr(c: Column, scale: int) -> Column:
     Columns with scale <= 6 can never hit the scientific branch
     (adjusted exponent >= -scale >= -6), so they keep the single cheap
     regexp — no extra codegen in the common case."""
-    plain = c.cast("string")
-    plain_len = F.length(F.regexp_replace(plain, "^(-?)0", "$1"))
+    plain = f"CAST({x} AS STRING)"
+    plain_len = f"length(regexp_replace({plain}, '^(-?)0', '$1'))"
     if scale <= 6:
         return plain_len
     # precision of the unscaled value; 0 marks the zero value
-    p = F.length(F.regexp_replace(F.translate(plain, "-.", ""), "^0+", ""))
-    neg = F.when(c < 0, F.lit(1)).otherwise(F.lit(0))
-    exp_digits = F.length((F.lit(scale + 1) - p).cast("string"))
+    p = f"length(regexp_replace(translate({plain}, '-.', ''), '^0+', ''))"
+    neg = f"CASE WHEN {x} < 0 THEN 1 ELSE 0 END"
+    exp_digits = f"length(CAST({scale + 1} - {p} AS STRING))"
     # [-] d [. d{p-1}] "E-" exp
-    sci_len = (neg + F.when(p == F.lit(1), F.lit(1)).otherwise(p + F.lit(1))
-               + F.lit(2) + exp_digits)
-    return (F.when(p == F.lit(0), F.lit(2 + len(str(scale))))  # "E-<scale>"
-            .when(p < F.lit(scale - 5), sci_len)
-            .otherwise(plain_len))
+    sci_len = (f"({neg}) + (CASE WHEN {p} = 1 THEN 1 ELSE {p} + 1 END) "
+               f"+ 2 + {exp_digits}")
+    return (f"CASE WHEN {p} = 0 THEN {2 + len(str(scale))} "  # "E-<scale>"
+            f"WHEN {p} < {scale - 5} THEN {sci_len} "
+            f"ELSE {plain_len} END")
 
 
-def length_expr(name: str, dt: T.DataType) -> Column | None:
-    """F2: value display-length. Strings -> char length; integrals -> decimal
-    digit count (incl. sign); booleans -> 4/5 ("true"/"false");
-    float/double/decimal -> Calcite-rendering length (see _fp_length_expr /
-    _decimal_length_expr); temporal -> no length (reference returns null for
-    java.sql.Date, StatsPojo.java:405-407)."""
-    c = F.col(name)
+def is_fp_type(dt: T.DataType) -> bool:
+    return isinstance(dt, (T.FloatType, T.DoubleType))
+
+
+def length_expr(x: str, dt: T.DataType) -> str | None:
+    """F2: value display-length of ``x``. Strings -> char length; integrals
+    -> decimal digit count (incl. sign); booleans -> 4/5 ("true"/"false");
+    decimal -> BigDecimal-rendering length (see _decimal_length_expr);
+    temporal -> no length (reference returns null for java.sql.Date,
+    StatsPojo.java:405-407). Float/double -> None here: their length is a
+    pandas UDF, which has no SQL text (:func:`fp_length_col`)."""
     if isinstance(dt, T.StringType):
-        return F.length(c)
+        return f"length({x})"
     if isinstance(dt, _INTEGRAL_TYPES):
-        return F.length(c.cast("string"))
+        return f"length(CAST({x} AS STRING))"
     if isinstance(dt, T.BooleanType):
-        return (F.when(c.isNull(), F.lit(None).cast("int"))
-                .when(c, F.lit(4)).otherwise(F.lit(5)))
-    if isinstance(dt, T.FloatType):
-        return _fp_length_expr(c, 7)    # MathContext.DECIMAL32
-    if isinstance(dt, T.DoubleType):
-        return _fp_length_expr(c, 16)   # MathContext.DECIMAL64
+        return (f"CASE WHEN {x} IS NULL THEN CAST(NULL AS INT) "
+                f"WHEN {x} THEN 4 ELSE 5 END")
     if isinstance(dt, T.DecimalType):
-        return _decimal_length_expr(c, dt.scale)
+        return _decimal_length_expr(x, dt.scale)
     return None
 
 
 def _duck_fp_length(x: str, sig: int) -> str:
-    """DuckDB mirror of _fp_length_expr ('%.{sig-1}e' printf; lowercase)."""
+    """DuckDB mirror of fp_length_col ('%.{sig-1}e' printf; lowercase)."""
     s = f"printf('%.{sig - 1}e', CAST({x} AS DOUBLE))"
     mant = f"split_part({s}, 'e', 1)"
     a = f"CAST(split_part({s}, 'e', 2) AS INTEGER)"
@@ -253,9 +275,9 @@ def _duck_decimal_length(name: str, scale: int) -> str:
 # blank test (F3)
 # --------------------------------------------------------------------------
 
-def is_blank_expr(c: Column) -> Column:
+def is_blank_expr(x: str) -> str:
     """F3: non-null and trim-empty."""
-    return c.isNotNull() & (F.trim(c) == "")
+    return f"({x} IS NOT NULL AND trim({x}) = '')"
 
 
 def duck_is_blank(name: str) -> str:
@@ -308,13 +330,13 @@ PATTERN_STEPS = [
 ]
 
 
-def pattern_expr(c: Column) -> Column:
+def pattern_expr(x: str) -> str:
     """F4: accent-fold then map chars: a-z->a, A-Z->A, 0-9->#, space/tab->b,
     keep ``/ : . - ' #``, anything else -> ?  (StringStatsTuple.java:24-46)."""
-    out = F.translate(c, ACCENT_SRC, ACCENT_DST)
-    out = F.regexp_replace(out, COMBINING_MARKS_RE, "")
+    out = f"translate({x}, {sql_str(ACCENT_SRC)}, {sql_str(ACCENT_DST)})"
+    out = f"regexp_replace({out}, {sql_str(COMBINING_MARKS_RE)}, '')"
     for pat, rep in PATTERN_STEPS:
-        out = F.regexp_replace(out, pat, rep)
+        out = f"regexp_replace({out}, {sql_str(pat)}, {sql_str(rep)})"
     return out
 
 
@@ -360,19 +382,20 @@ DATE_PATTERNS = [
 ]
 
 
-def parses_bool_expr(c: Column) -> Column:
+def parses_bool_expr(x: str) -> str:
     """F5: Java Boolean.parseBoolean — ONLY case-insensitive "true" counts
     (the reference quirk; "false" does not increment the counter)."""
-    return c.isNotNull() & (F.lower(c) == "true")
+    return f"({x} IS NOT NULL AND lower({x}) = 'true')"
 
 
 def duck_parses_bool(name: str) -> str:
     return f"({name} IS NOT NULL AND lower({name}) = 'true')"
 
 
-def parses_int_expr(c: Column) -> Column:
+def parses_int_expr(x: str) -> str:
     """F6: Java Integer.parseInt — digits-only shape (no trim) + i32 range."""
-    return c.rlike(INT_RE) & c.try_cast("int").isNotNull()
+    return (f"({x} RLIKE {sql_str(INT_RE)} "
+            f"AND try_cast({x} AS INT) IS NOT NULL)")
 
 
 def duck_parses_int(name: str) -> str:
@@ -380,8 +403,9 @@ def duck_parses_int(name: str) -> str:
             f"AND TRY_CAST({name} AS INTEGER) IS NOT NULL)")
 
 
-def parses_long_expr(c: Column) -> Column:
-    return c.rlike(INT_RE) & c.try_cast("bigint").isNotNull()
+def parses_long_expr(x: str) -> str:
+    return (f"({x} RLIKE {sql_str(INT_RE)} "
+            f"AND try_cast({x} AS BIGINT) IS NOT NULL)")
 
 
 def duck_parses_long(name: str) -> str:
@@ -389,11 +413,12 @@ def duck_parses_long(name: str) -> str:
             f"AND TRY_CAST({name} AS BIGINT) IS NOT NULL)")
 
 
-def parses_float_expr(c: Column) -> Column:
+def parses_float_expr(x: str) -> str:
     """F6: Java Float/Double.parseXxx (they trim chars <= U+0020 via
     String.trim; overflow goes to Infinity so there is no range check).
     Float and double acceptance are identical by construction."""
-    return F.regexp_replace(c, JAVA_TRIM_RE, "").rlike(FLOAT_RE)
+    return (f"(regexp_replace({x}, {sql_str(JAVA_TRIM_RE)}, '') "
+            f"RLIKE {sql_str(FLOAT_RE)})")
 
 
 def duck_parses_float(name: str) -> str:
@@ -403,17 +428,15 @@ def duck_parses_float(name: str) -> str:
             f"'{JAVA_TRIM_RE}', '', 'g'), '{FLOAT_RE}')")
 
 
-def parses_date_expr(c: Column) -> Column:
+def parses_date_expr(x: str) -> str:
     """F7: strict multi-pattern date check — value counts once if it matches
     ANY of the 7 reference patterns (shape regex + calendar validity)."""
     checks = [
-        c.rlike(shape) & F.try_to_date(c, fmt).isNotNull()
+        f"({x} RLIKE {sql_str(shape)} "
+        f"AND try_to_date({x}, {sql_str(fmt)}) IS NOT NULL)"
         for fmt, _, shape in DATE_PATTERNS
     ]
-    out = checks[0]
-    for chk in checks[1:]:
-        out = out | chk
-    return c.isNotNull() & out
+    return f"({x} IS NOT NULL AND ({' OR '.join(checks)}))"
 
 
 def duck_parses_date(name: str) -> str:

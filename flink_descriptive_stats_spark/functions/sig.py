@@ -39,8 +39,8 @@ aggregate values with EXACT decimal expansions ending at the 8th significant
 digit common, and the two engines' ulp-level summation differences then land
 on opposite sides of the rounding boundary. Scaling by exactly 1+2^-40
 (9.1e-13 relative — 100x the engine deltas, 1e5x below the output quantum)
-pushes every exact tie off the boundary in the same direction on all three
-implementations (Spark Column, DuckDB SQL, Python)."""
+pushes every exact tie off the boundary in the same direction on every
+implementation (Spark Column and SQL text, DuckDB SQL, Python)."""
 
 
 def sig6(c: Column) -> Column:
@@ -66,6 +66,23 @@ def sig6(c: Column) -> Column:
         .otherwise(F.concat(m2.cast("string"), F.lit("e"),
                             (e2 - 6).cast("string")))
     )
+
+
+def sig6_sql(x: str) -> str:
+    """:func:`sig6` as Spark SQL text over the double expression ``x``
+    (best a column reference: the text repeats it). The same arithmetic,
+    with the overflow renormalization folded into one branch: its parse
+    cost grows with the text."""
+    y = f"({x} * {NUDGE!r}D)"
+    e = f"floor(log10(abs({y})))"                 # floor(double) is BIGINT
+    m = f"CAST(round({y} / pow(10.0D, {e} - 6), 0) AS BIGINT)"
+    return (f"CASE WHEN {x} IS NULL OR isnan({x}) THEN CAST(NULL AS STRING) "
+            f"WHEN {x} = 0 OR abs({x}) < 1e-300D THEN '0e0' "  # see sig6
+            f"WHEN {x} > 1e300D THEN 'inf' "
+            f"WHEN {x} < -1e300D THEN '-inf' "
+            f"WHEN abs({m}) >= 10000000 "
+            f"THEN concat(CAST({m} / 10 AS BIGINT), 'e', {e} - 5) "
+            f"ELSE concat({m}, 'e', {e} - 6) END")
 
 
 def sig6_py(x: float | None) -> str | None:

@@ -1622,7 +1622,7 @@ def schema_suggestions(df: DataFrame) -> DataFrame:
     import pyarrow as pa
     from pyspark.sql import types as T
     from flink_descriptive_stats_spark.functions.memo import (
-        agg_row_memoized, agg_row_peek)
+        ROWS, agg_row_peek, data_memoized)
     from flink_descriptive_stats_spark.functions.sig import sig6_py
 
     def local_frame(rows: list) -> DataFrame:
@@ -1649,16 +1649,16 @@ def schema_suggestions(df: DataFrame) -> DataFrame:
     else:
         aggs = []
         for _, c in cols:
-            x = F.col(c)
-            aggs += [
-                F.count(x).alias(f"{c}__n"),
-                F.count_if(scalar.parses_bool_expr(x)).alias(f"{c}__bool"),
-                F.count_if(scalar.parses_long_expr(x)).alias(f"{c}__long"),
-                F.count_if(scalar.parses_float_expr(x)).alias(f"{c}__dbl"),
-                F.count_if(scalar.parses_date_expr(x)).alias(f"{c}__date"),
-            ]
-        row = agg_row_memoized(
-            df, aggs, ("schema_suggestions", tuple(c for _, c in cols)))
+            x = scalar.ident(c)
+            aggs += [f"count({x}) AS {scalar.ident(c + '__n')}"] + [
+                f"count_if({fn(x)}) AS {scalar.ident(c + suffix)}"
+                for fn, suffix in ((scalar.parses_bool_expr, "__bool"),
+                                   (scalar.parses_long_expr, "__long"),
+                                   (scalar.parses_float_expr, "__dbl"),
+                                   (scalar.parses_date_expr, "__date"))]
+        row = data_memoized(
+            ROWS, df, ("schema_suggestions", tuple(c for _, c in cols)),
+            lambda: df.selectExpr(*aggs).collect()[0])
 
         def col_counts(i, c):
             return int(row[f"{c}__n"]), [

@@ -33,123 +33,109 @@ Derived statistics (closed-form over the aggregated row, StatsPojo.java:
       0.4/0.6/0.7 when ceil(popSkew) == 1/2/3 (uses ROW count, not numeric
       count — a reference quirk we replicate, ProfileJob.java:152-160).
 
-One finish (:func:`finish`) applies these Column expressions, then sig6,
-for every profile: the batch profile over a local relation of its melted
-aggregate row (Catalyst evaluates it while optimizing, so no Spark job
-runs), the windowed and grouped profiles over their per-group rows. There
-is no second, driver-side copy of the formulas; the DuckDB oracle is the
-independent reference.
+One finish (:func:`finish`) applies these expressions, as Spark SQL text,
+then sig6, for every profile: the batch profile over a local relation of
+its melted aggregate row (Catalyst evaluates it while optimizing, so no
+Spark job runs), the windowed and grouped profiles over their per-group
+rows. There is no second, driver-side copy of the formulas; the DuckDB
+oracle is the independent reference.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from flink_descriptive_stats_spark.functions.memo import exprs_memoized
-from flink_descriptive_stats_spark.functions.sig import sig6
+from flink_descriptive_stats_spark.functions.scalar import ident
+from flink_descriptive_stats_spark.functions.sig import sig6_sql
 
-# Raw aggregate slots computed inside the single-pass agg for one numeric
-# (widened-to-double) expression x. Everything else is derived post-agg.
-RAW_NUMERIC_STATS = ("n", "min", "max", "mean", "var_pop", "var_samp",
-                     "skew_raw", "kurt_raw")
-
-
-def numeric_agg_exprs(x: Column, prefix: str) -> list[Column]:
-    """A3, A5-A9: the one-pass aggregate slots for a numeric column."""
-    return [
-        F.count(x).alias(f"{prefix}n"),
-        F.min(x).alias(f"{prefix}min"),
-        F.max(x).alias(f"{prefix}max"),
-        F.avg(x).alias(f"{prefix}mean"),
-        F.var_pop(x).alias(f"{prefix}var_pop"),
-        F.var_samp(x).alias(f"{prefix}var_samp"),
-        F.skewness(x).alias(f"{prefix}skew_raw"),
-        F.kurtosis(x).alias(f"{prefix}kurt_raw"),
-    ]
+# Raw aggregate slot -> its aggregate, computed inside the single-pass agg
+# for one numeric (widened-to-double) expression x. Everything else is
+# derived post-agg.
+RAW_NUMERIC_STATS = {"n": "count", "min": "min", "max": "max", "mean": "avg",
+                     "var_pop": "var_pop", "var_samp": "var_samp",
+                     "skew_raw": "skewness", "kurt_raw": "kurtosis"}
 
 
-def derived_stats(n: Column, row_count: Column, mean: Column,
-                  var_pop: Column, var_samp: Column,
-                  skew_raw: Column, kurt_raw: Column) -> dict[str, Column]:
-    """D1-D10 as Column expressions over the aggregated slots.
+def numeric_agg_exprs(x: str, prefix: str) -> list[str]:
+    """A3, A5-A9: the one-pass aggregate slots for the numeric SQL
+    expression ``x``, named ``prefix`` + RAW_NUMERIC_STATS."""
+    return [f"{agg}({x}) AS {ident(prefix + slot)}"
+            for slot, agg in RAW_NUMERIC_STATS.items()]
 
-    Returns every derived statistic as a raw double Column (callers render
-    with sig6 for oracle-stable output).
-    """
-    nd = n.cast("double")
-    none = F.lit(None).cast("double")
 
-    stddev_pop = F.sqrt(var_pop)
-    stddev_samp = F.sqrt(var_samp)
+def derived_stats(n: str, row_count: str, mean: str, var_pop: str,
+                  var_samp: str, skew_raw: str, kurt_raw: str
+                  ) -> dict[str, str]:
+    """D1-D10 as Spark SQL text over the aggregated slots (SQL expressions,
+    best column references): raw doubles, which callers render with sig6.
+    Fractional literals carry a ``D``: a bare ``3.49`` is a DECIMAL."""
+    nd = f"CAST({n} AS DOUBLE)"
+    none = "CAST(NULL AS DOUBLE)"
+
+    def when_n0(expr: str) -> str:
+        return f"CASE WHEN {n} = 0 THEN {none} ELSE {expr} END"
+
+    def when_n_ge(k: int, expr: str) -> str:
+        return f"CASE WHEN {n} >= {k} THEN {expr} ELSE {none} END"
+
+    stddev_pop = f"sqrt({var_pop})"
+    stddev_samp = f"sqrt({var_samp})"
 
     # |skew| below 1e-9 is summation noise from an exactly-symmetric sample
     # (the two engines' different summation orders yield different tiny
     # garbage); snap to the statistically-correct 0.0 on both sides.
-    skew_pop = (F.when(n == 0, none)
-                .when(var_pop == 0, F.lit(0.0))
-                .when(F.abs(skew_raw) < 1e-9, F.lit(0.0))
-                .otherwise(skew_raw))
-    kurt_pop = (F.when(n == 0, none)
-                .when(var_pop == 0, F.lit(0.0))
-                .otherwise(kurt_raw + F.lit(3.0)))
-    skew_samp = (F.when(n == 0, none)
-                 .when(n == 1, F.lit(0.0))
-                 .otherwise(skew_pop * nd / (nd - 1)))
-    kurt_samp = (F.when(n == 0, none)
-                 .when(n == 1, F.lit(0.0))
-                 .otherwise(kurt_pop * nd / (nd - 1)))
-    kurt_excess_pop = F.when(n == 0, none).otherwise(kurt_pop - 3.0)
-    kurt_excess_samp = F.when(n == 0, none).otherwise(kurt_samp - 3.0)
+    skew_pop = (f"(CASE WHEN {n} = 0 THEN {none} "
+                f"WHEN {var_pop} = 0 THEN 0.0D "
+                f"WHEN abs({skew_raw}) < 1.0E-9D THEN 0.0D "
+                f"ELSE {skew_raw} END)")
+    kurt_pop = (f"(CASE WHEN {n} = 0 THEN {none} "
+                f"WHEN {var_pop} = 0 THEN 0.0D "
+                f"ELSE {kurt_raw} + 3.0D END)")
+    skew_samp = (f"(CASE WHEN {n} = 0 THEN {none} WHEN {n} = 1 THEN 0.0D "
+                 f"ELSE {skew_pop} * {nd} / ({nd} - 1) END)")
+    kurt_samp = (f"(CASE WHEN {n} = 0 THEN {none} WHEN {n} = 1 THEN 0.0D "
+                 f"ELSE {kurt_pop} * {nd} / ({nd} - 1) END)")
+    kurt_excess_pop = f"({when_n0(f'{kurt_pop} - 3.0D')})"
+    kurt_excess_samp = f"({when_n0(f'{kurt_samp} - 3.0D')})"
 
-    se_mean = F.when(n >= 2, stddev_samp / F.sqrt(nd)).otherwise(none)
-    se_var = F.when(n >= 2, var_samp * F.sqrt(F.lit(2.0) / (nd - 1))).otherwise(none)
-    se_stddev = F.when(n >= 2, stddev_samp / F.sqrt(2 * (nd - 1))).otherwise(none)
-    se_skew_core = F.sqrt((6 * nd * (nd - 1))
-                          / ((nd - 2) * (nd + 1) * (nd + 3)))
-    se_skew = F.when(n >= 3, se_skew_core).otherwise(none)
-    se_kurt = F.when(
-        n >= 4,
-        2 * se_skew_core * F.sqrt((nd * nd - 1) / ((nd - 3) * (nd + 5))),
-    ).otherwise(none)
-
-    jb = F.when(n == 0, none).otherwise(
-        (nd / 6.0) * (skew_samp * skew_samp
-                      + 0.25 * kurt_excess_samp * kurt_excess_samp))
+    se_skew_core = (f"sqrt((6 * {nd} * ({nd} - 1)) "
+                    f"/ (({nd} - 2) * ({nd} + 1) * ({nd} + 3)))")
 
     # D10: Scott's-rule histogram bin width (ProfileJob.java:146-162); uses
     # the full row count and population skewness ceiling as in the reference.
     # floor() casts to bigint, which turns NaN into 0: a NaN stddev stays NULL
     # like the column's other moments.
-    base_width = F.when(F.isnan(stddev_pop), none).otherwise(F.floor(
-        3.49 * stddev_pop * F.pow(row_count.cast("double"), F.lit(-1.0 / 3.0))
-    ).cast("double"))
-    skew_ceil = F.ceil(skew_pop)
-    scott = (F.when(skew_ceil == 1, base_width * 0.4)
-             .when(skew_ceil == 2, base_width * 0.6)
-             .when(skew_ceil == 3, base_width * 0.7)
-             .otherwise(base_width))
-    scott = F.when(n == 0, none).otherwise(scott)
+    base_width = (f"(CASE WHEN isnan({stddev_pop}) THEN {none} ELSE CAST("
+                  f"floor(3.49D * {stddev_pop} * pow(CAST({row_count} AS "
+                  f"DOUBLE), {-1.0 / 3.0!r}D)) AS DOUBLE) END)")
+    skew_ceil = f"ceil({skew_pop})"
+    scott = (f"CASE WHEN {skew_ceil} = 1 THEN {base_width} * 0.4D "
+             f"WHEN {skew_ceil} = 2 THEN {base_width} * 0.6D "
+             f"WHEN {skew_ceil} = 3 THEN {base_width} * 0.7D "
+             f"ELSE {base_width} END")
 
     return {
-        "mean": F.when(n == 0, none).otherwise(mean),
-        "var_pop": F.when(n == 0, none).otherwise(var_pop),
-        "var_samp": F.when(n >= 2, var_samp).otherwise(none),
-        "stddev_pop": F.when(n == 0, none).otherwise(stddev_pop),
-        "stddev_samp": F.when(n >= 2, stddev_samp).otherwise(none),
+        "mean": when_n0(mean),
+        "var_pop": when_n0(var_pop),
+        "var_samp": when_n_ge(2, var_samp),
+        "stddev_pop": when_n0(stddev_pop),
+        "stddev_samp": when_n_ge(2, stddev_samp),
         "skew_pop": skew_pop,
         "skew_samp": skew_samp,
         "kurt_pop": kurt_pop,
         "kurt_samp": kurt_samp,
         "kurt_excess_pop": kurt_excess_pop,
         "kurt_excess_samp": kurt_excess_samp,
-        "se_mean": se_mean,
-        "se_var": se_var,
-        "se_stddev": se_stddev,
-        "se_skew": se_skew,
-        "se_kurt": se_kurt,
-        "jb_score": jb,
-        "scott_bin_width": scott,
+        "se_mean": when_n_ge(2, f"{stddev_samp} / sqrt({nd})"),
+        "se_var": when_n_ge(2, f"{var_samp} * sqrt(2.0D / ({nd} - 1))"),
+        "se_stddev": when_n_ge(2, f"{stddev_samp} / sqrt(2 * ({nd} - 1))"),
+        "se_skew": when_n_ge(3, se_skew_core),
+        "se_kurt": when_n_ge(4, f"2 * {se_skew_core} * sqrt(({nd} * {nd} - 1)"
+                                f" / (({nd} - 3) * ({nd} + 5)))"),
+        "jb_score": when_n0(
+            f"({nd} / 6.0D) * ({skew_samp} * {skew_samp} "
+            f"+ 0.25D * {kurt_excess_samp} * {kurt_excess_samp})"),
+        "scott_bin_width": when_n0(scott),
     }
 
 
@@ -176,36 +162,20 @@ def finish(raw: DataFrame, columns: list[str],
     is one of DERIVED_STATS, derived from those slots, or a raw double
     column of ``raw`` rendered as it is (the batch profile's ``avg_len``).
 
-    Staged on purpose: an earlier version inlined sig6(derived_stats(...))
-    per source column inside the pre-explode structs, and since sig6
-    references its input ~7x and the derived trees nest when-chains inside
-    when-chains, the ANALYZED plan blew up combinatorially — Catalyst
-    optimization alone cost ~4.5s of driver CPU per planning at 3 columns.
-    Two small selects instead: derive (each tree appears ONCE, over plain
-    attribute refs) -> sig6 (duplicates only attribute refs). Catalyst keeps
-    the stages as separate Projects because the producer expressions are
-    non-cheap and multiply-referenced, so the tree never re-inlines; the
-    projections run over groups x columns rows, which is tiny at any scale.
-    Both stages are built once per SparkContext: a Column node costs a py4j
-    round trip, and the stages hold several hundred.
+    Two ``selectExpr`` stages of SQL text: derive (over attribute
+    references) -> sig6 (which repeats its input ~7x, so it reads the
+    derived attributes, not their nested CASE trees). Catalyst keeps the
+    stages apart: the derived expressions are non-cheap and referenced
+    many times. They run over groups x columns rows, tiny at any scale.
     """
-    derive, render = exprs_memoized(
-        ("profile_finish", tuple(columns), stats),
-        lambda: _finish_stages(columns, stats))
-    return raw.select(*derive).select(*render)
-
-
-def _finish_stages(columns: list[str],
-                   stats: tuple[str, ...]) -> tuple[list, list]:
-    d = derived_stats(*[F.col(c) for c in (
+    d = derived_stats(*[ident(c) for c in (
         "numeric_count", "row_count", *MOMENT_SLOTS)])
-    keep = [c for c in columns if c not in stats]
-    derive = ([F.col(c) for c in keep]
-              + [(d[s] if s in d else F.col(s)).alias(f"__d_{s}")
+    derive = ([ident(c) for c in columns if c not in stats]
+              + [f"{d.get(s, ident(s))} AS {ident('__d_' + s)}"
                  for s in stats])
-    render = [sig6(F.col(f"__d_{c}")).alias(c) if c in stats else F.col(c)
-              for c in columns]
-    return derive, render
+    render = [f"{sig6_sql(ident('__d_' + c))} AS {ident(c)}" if c in stats
+              else ident(c) for c in columns]
+    return raw.selectExpr(*derive).selectExpr(*render)
 
 
 # ---------------------------------------------------------------------------
@@ -221,15 +191,13 @@ def profile_state(df, columns: list[str] | None = None):
     exactly from the built-in one-pass aggregates (skewness = M3 sqrt(n)
     / M2^1.5, kurtosis = n M4 / M2^2 - 3; M2 = var_pop * n), so the
     state costs ONE scan with full codegen, not a custom UDAF."""
-    from pyspark.sql import functions as F
     from flink_descriptive_stats_spark.operators.extras import (
         numeric_columns)
     cols = columns or numeric_columns(df)
     aggs = []
     for c in cols:
-        x = F.col(c).cast("double")
-        aggs += numeric_agg_exprs(x, f"{c}__")
-    row = df.agg(*aggs).collect()[0]
+        aggs += numeric_agg_exprs(f"CAST({ident(c)} AS DOUBLE)", f"{c}__")
+    row = df.selectExpr(*aggs).collect()[0]
     out = []
     for c in cols:
         n = int(row[f"{c}__n"])
@@ -257,44 +225,40 @@ def merge_profile_states(a, b):
     equi-join of two <=n_cols-row frames; associative and commutative up
     to FP rounding, which the sig6 finalize absorbs."""
     from pyspark.sql import functions as F
-    an = [F.col(f"a.{c}").alias(f"a_{c}")
-          for c in ("n", "mean", "m2", "m3", "m4", "min_val", "max_val")]
-    bn = [F.col(f"b.{c}").alias(f"b_{c}")
-          for c in ("n", "mean", "m2", "m3", "m4", "min_val", "max_val")]
-    j = (a.alias("a").join(b.alias("b"), F.col("a.column") == F.col("b.column"),
-                           "full")
-         .select(F.coalesce(F.col("a.column"), F.col("b.column"))
-                 .alias("column"), *an, *bn))
-    na, nb = F.coalesce("a_n", F.lit(0)), F.coalesce("b_n", F.lit(0))
-    n = (na + nb).cast("double")
-    d = F.coalesce("b_mean", F.lit(0.0)) - F.coalesce("a_mean", F.lit(0.0))
-    naf, nbf = na.cast("double"), nb.cast("double")
-    za = [F.coalesce(f"a_{c}", F.lit(0.0)) for c in ("m2", "m3", "m4")]
-    zb = [F.coalesce(f"b_{c}", F.lit(0.0)) for c in ("m2", "m3", "m4")]
-    mean = F.when(n > 0, (naf * F.coalesce("a_mean", F.lit(0.0))
-                          + nbf * F.coalesce("b_mean", F.lit(0.0))) / n) \
-        .otherwise(F.lit(0.0))
-    m2 = za[0] + zb[0] + F.when(n > 0, d * d * naf * nbf / n) \
-        .otherwise(F.lit(0.0))
-    m3 = (za[1] + zb[1]
-          + F.when(n > 0, d * d * d * naf * nbf * (naf - nbf) / (n * n))
-          .otherwise(F.lit(0.0))
-          + F.when(n > 0, 3.0 * d * (naf * zb[0] - nbf * za[0]) / n)
-          .otherwise(F.lit(0.0)))
-    m4 = (za[2] + zb[2]
-          + F.when(n > 0, d * d * d * d * naf * nbf
-                   * (naf * naf - naf * nbf + nbf * nbf) / (n * n * n))
-          .otherwise(F.lit(0.0))
-          + F.when(n > 0, 6.0 * d * d
-                   * (naf * naf * zb[0] + nbf * nbf * za[0]) / (n * n))
-          .otherwise(F.lit(0.0))
-          + F.when(n > 0, 4.0 * d * (naf * zb[1] - nbf * za[1]) / n)
-          .otherwise(F.lit(0.0)))
-    return j.select(
-        "column", (na + nb).alias("n"), mean.alias("mean"),
-        m2.alias("m2"), m3.alias("m3"), m4.alias("m4"),
-        F.least("a_min_val", "b_min_val").alias("min_val"),
-        F.greatest("a_max_val", "b_max_val").alias("max_val"))
+    j = (a.alias("a")
+         .join(b.alias("b"), F.expr("a.`column` = b.`column`"), "full")
+         .selectExpr("coalesce(a.`column`, b.`column`) AS `column`",
+                     *[f"{t}.{c} AS {t}_{c}" for t in "ab" for c in (
+                         "n", "mean", "m2", "m3", "m4", "min_val",
+                         "max_val")]))
+    na, nb = "coalesce(a_n, 0)", "coalesce(b_n, 0)"
+    n = f"CAST({na} + {nb} AS DOUBLE)"
+    d = "(coalesce(b_mean, 0.0D) - coalesce(a_mean, 0.0D))"
+    naf, nbf = f"CAST({na} AS DOUBLE)", f"CAST({nb} AS DOUBLE)"
+    za = [f"coalesce(a_{c}, 0.0D)" for c in ("m2", "m3", "m4")]
+    zb = [f"coalesce(b_{c}, 0.0D)" for c in ("m2", "m3", "m4")]
+
+    def pos(e: str) -> str:
+        return f"(CASE WHEN {n} > 0 THEN {e} ELSE 0.0D END)"
+
+    mean = pos(f"({naf} * coalesce(a_mean, 0.0D) "
+               f"+ {nbf} * coalesce(b_mean, 0.0D)) / {n}")
+    m2 = f"{za[0]} + {zb[0]} + " + pos(f"{d} * {d} * {naf} * {nbf} / {n}")
+    m3 = (f"{za[1]} + {zb[1]} + "
+          + pos(f"{d} * {d} * {d} * {naf} * {nbf} * ({naf} - {nbf}) "
+                f"/ ({n} * {n})") + " + "
+          + pos(f"3.0D * {d} * ({naf} * {zb[0]} - {nbf} * {za[0]}) / {n}"))
+    m4 = (f"{za[2]} + {zb[2]} + "
+          + pos(f"{d} * {d} * {d} * {d} * {naf} * {nbf} * ({naf} * {naf} "
+                f"- {naf} * {nbf} + {nbf} * {nbf}) / ({n} * {n} * {n})")
+          + " + "
+          + pos(f"6.0D * {d} * {d} * ({naf} * {naf} * {zb[0]} "
+                f"+ {nbf} * {nbf} * {za[0]}) / ({n} * {n})") + " + "
+          + pos(f"4.0D * {d} * ({naf} * {zb[1]} - {nbf} * {za[1]}) / {n}"))
+    return j.selectExpr(
+        "`column`", f"{na} + {nb} AS n", f"{mean} AS mean", f"{m2} AS m2",
+        f"{m3} AS m3", f"{m4} AS m4", "least(a_min_val, b_min_val) AS min_val",
+        "greatest(a_max_val, b_max_val) AS max_val")
 
 
 def finalize_profile_state(state):
@@ -302,19 +266,14 @@ def finalize_profile_state(state):
     kurtosis, min_val, max_val) with the FP stats sig6-rendered and the
     same degenerate-case conventions as the one-shot profile (M2 == 0 ->
     skew/kurt 0; n == 0 -> NULLs)."""
-    from pyspark.sql import functions as F
-    from flink_descriptive_stats_spark.functions.sig import sig6
-    n = F.col("n").cast("double")
-    m2, m3, m4 = F.col("m2"), F.col("m3"), F.col("m4")
-    var_pop = F.when(F.col("n") > 0, m2 / n)
-    skew = F.when((F.col("n") > 0) & (m2 > 0),
-                  m3 * F.sqrt(n) / F.pow(m2, 1.5)) \
-        .when(F.col("n") > 0, F.lit(0.0))
-    kurt = F.when((F.col("n") > 0) & (m2 > 0),
-                  n * m4 / (m2 * m2) - 3.0) \
-        .when(F.col("n") > 0, F.lit(0.0))
-    mean = F.when(F.col("n") > 0, F.col("mean"))
-    return state.select(
-        "column", "n", sig6(mean).alias("mean"),
-        sig6(var_pop).alias("var_pop"), sig6(skew).alias("skewness"),
-        sig6(kurt).alias("kurtosis"), "min_val", "max_val")
+    n = "CAST(n AS DOUBLE)"
+    stats = {
+        "mean": "CASE WHEN n > 0 THEN mean END",
+        "var_pop": f"CASE WHEN n > 0 THEN m2 / {n} END",
+        "skewness": f"CASE WHEN n > 0 AND m2 > 0 THEN m3 * sqrt({n}) "
+                    f"/ pow(m2, 1.5D) WHEN n > 0 THEN 0.0D END",
+        "kurtosis": f"CASE WHEN n > 0 AND m2 > 0 THEN {n} * m4 / (m2 * m2) "
+                    f"- 3.0D WHEN n > 0 THEN 0.0D END"}
+    return state.selectExpr(
+        "`column`", "n", *[f"{sig6_sql(f'({e})')} AS {s}"
+                           for s, e in stats.items()], "min_val", "max_val")

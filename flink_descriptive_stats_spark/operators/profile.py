@@ -1,14 +1,18 @@
 """Whole-table single-pass profile (the engine's flagship operator).
 
-Equivalent surface: the reference's entire ProfileJob dataflow
-(ProfileJob.java:78-143) — per-column basic stats, string stats, latent-type
-counters, plus the row-completeness side pipeline (RowStatsCollectHelper) —
-but where the reference re-scans its source 1 + N_cols (+ 2 per string
-column) times with a per-column pipeline fan-out (ProfileJob.java:94-113), we
-compute EVERYTHING in one ``df.agg`` pass:
+Equivalent surface: the reference's per-column ProfileJob dataflow
+(ProfileJob.java:78-143) — basic stats, string stats and latent-type
+counters. Where the reference re-scans its source 1 + N_cols (+ 2 per
+string column) times with a per-column pipeline fan-out
+(ProfileJob.java:94-113), we compute every column's slots in one aggregate
+pass, a single ``selectExpr`` of Spark SQL text:
 
   parquet scan -> partial HashAggregate (per partition, codegen)
                -> 1-row exchange -> final HashAggregate -> tiny result
+
+The reference's row-completeness side pipeline (RowStatsCollectHelper) is
+``complete_row_count``: a separate one-row aggregate over the same input,
+with its own scan and two Spark jobs, not part of this pass.
 
 At 100 TB this is the optimal shape: one pass over the data, the only shuffle
 moves a single row of ~30*N_cols doubles per partition, no skew possible.
@@ -25,11 +29,11 @@ functions/sig.py for why).
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from flink_descriptive_stats_spark.functions import scalar
+from flink_descriptive_stats_spark.functions.memo import ROWS, data_memoized
 from flink_descriptive_stats_spark.operators import moments
 
 # Long-format output schema (name, type) — fixed order, every profile row.
@@ -55,66 +59,64 @@ _RAW_SCHEMA = pa.schema(
     + [(s, pa.float64()) for s in moments.MOMENT_SLOTS])
 
 
-def completeness_expr(df: DataFrame) -> Column:
+def completeness_expr(df: DataFrame) -> str:
     """A16/S2: a row is "complete" iff every field is non-null and its string
     form is not blank (RowStatsCollectHelper.java:31-38). For non-string
     types the string form is never blank, so only string columns need the
     trim test — this keeps the predicate cheap and pushdown-friendly."""
-    conds = []
-    for f in df.schema.fields:
-        c = F.col(f.name)
-        cond = c.isNotNull()
-        if isinstance(f.dataType, T.StringType):
-            cond = cond & (F.trim(c) != "")
-        conds.append(cond)
-    out = conds[0]
-    for cond in conds[1:]:
-        out = out & cond
-    return out
+    return " AND ".join(
+        f"({x} IS NOT NULL AND trim({x}) != '')"
+        if isinstance(f.dataType, T.StringType) else f"{x} IS NOT NULL"
+        for f, x in ((f, scalar.ident(f.name)) for f in df.schema.fields))
 
 
-def _agg_exprs_for_column(i: int, name: str, dt: T.DataType) -> list[Column]:
-    """The column's aggregate slots, memoized per SparkContext:
-    building one Column is 1-2 py4j round trips, and the ~200-expression
-    lineitem bundle costs ~0.7s of driver time, rebuilt by every
-    profile-family query over the same schema."""
-    from flink_descriptive_stats_spark.functions.memo import exprs_memoized
-    return exprs_memoized(("profile_slots", i, name, dt.simpleString()),
-                          lambda: _build_agg_exprs_for_column(i, name, dt))
+#: The projected pandas-UDF display length of float/double column i.
+_FP_LEN = "__c{}_fp_len"
 
 
-def _build_agg_exprs_for_column(i: int, name: str,
-                                dt: T.DataType) -> list[Column]:
-    """The single-pass aggregate slots for one column (A1-A11)."""
-    c = F.col(name)
+def _column_slots(i: int, f: T.StructField) -> list[str]:
+    """The single-pass aggregate slots for one column (A1-A11), as Spark
+    SQL text. A float/double column's length slots read its projected
+    pandas-UDF length, ``_FP_LEN``."""
+    dt = f.dataType
+    x = scalar.ident(f.name)
     p = f"c{i}__"
-    exprs = [F.count_if(c.isNull()).alias(f"{p}nulls")]
+    exprs = [f"count_if({x} IS NULL) AS {p}nulls"]
 
-    x = scalar.numeric_expr(name, dt)
-    if x is not None:
-        exprs += moments.numeric_agg_exprs(x, p)
+    num = scalar.numeric_expr(x, dt)
+    if num is not None:
+        exprs += moments.numeric_agg_exprs(num, p)
 
-    ln = scalar.length_expr(name, dt)
+    ln = (scalar.ident(_FP_LEN.format(i)) if scalar.is_fp_type(dt)
+          else scalar.length_expr(x, dt))
     if ln is not None:
-        exprs += [
-            F.min(ln).cast("bigint").alias(f"{p}min_len"),
-            F.max(ln).cast("bigint").alias(f"{p}max_len"),
-            F.avg(ln).alias(f"{p}avg_len"),
-        ]
+        exprs += [f"CAST(min({ln}) AS BIGINT) AS {p}min_len",
+                  f"CAST(max({ln}) AS BIGINT) AS {p}max_len",
+                  f"avg({ln}) AS {p}avg_len"]
 
     if isinstance(dt, T.StringType):
         # A4 empty strings + A11 latent-type counters. The reference's merge
         # loses the type counters across partitions (StatsPojo.java:101-155
         # never sums them — SURVEY.md §2.6 item 2); count_if sums correctly.
-        exprs += [
-            F.count_if(scalar.is_blank_expr(c)).alias(f"{p}empty"),
-            F.count_if(scalar.parses_bool_expr(c)).alias(f"{p}bool_count"),
-            F.count_if(scalar.parses_int_expr(c)).alias(f"{p}int_count"),
-            F.count_if(scalar.parses_long_expr(c)).alias(f"{p}long_count"),
-            F.count_if(scalar.parses_float_expr(c)).alias(f"{p}float_count"),
-            F.count_if(scalar.parses_date_expr(c)).alias(f"{p}date_count"),
-        ]
+        exprs += [f"count_if({fn(x)}) AS {p}{slot}" for fn, slot in (
+            (scalar.is_blank_expr, "empty"),
+            (scalar.parses_bool_expr, "bool_count"),
+            (scalar.parses_int_expr, "int_count"),
+            (scalar.parses_long_expr, "long_count"),
+            (scalar.parses_float_expr, "float_count"),
+            (scalar.parses_date_expr, "date_count"))]
     return exprs
+
+
+def _aggregate(df: DataFrame, chunk: list) -> DataFrame:
+    """The one-row aggregate of ``chunk``'s (index, field, slots): one
+    ``selectExpr``, over ``df`` plus the pandas-UDF lengths of its
+    float/double columns."""
+    fp_lens = {_FP_LEN.format(i): scalar.fp_length_col(f.name, f.dataType)
+               for i, f, _ in chunk if scalar.is_fp_type(f.dataType)}
+    src = df.withColumns(fp_lens) if fp_lens else df
+    return src.selectExpr("count(1) AS row_count",
+                          *[e for _, _, exprs in chunk for e in exprs])
 
 
 def profile(df: DataFrame, columns: list[str] | None = None,
@@ -126,7 +128,7 @@ def profile(df: DataFrame, columns: list[str] | None = None,
     (memoized per input). That row is melted into a local relation, one
     row per column, and ``moments.finish`` — the same finish as the
     windowed and grouped profiles — derives D1-D10 and renders them with
-    sig6 as Column expressions over it. Spark's ConvertToLocalRelation rule
+    sig6 as SQL expressions over it. Spark's ConvertToLocalRelation rule
     evaluates those projections, and a consumer's filter and projection
     (jb_report), while it optimizes the plan: collecting the result runs
     no Spark job and compiles no code. (Inside the aggregate plan, the
@@ -150,7 +152,7 @@ def profile(df: DataFrame, columns: list[str] | None = None,
     fields = [f for f in df.schema.fields
               if columns is None or f.name in columns]
 
-    per_field = [(i, f, _agg_exprs_for_column(i, f.name, f.dataType))
+    per_field = [(i, f, _column_slots(i, f))
                  for i, f in enumerate(fields)]
     chunks: list[list] = []
     cur: list = []
@@ -163,17 +165,14 @@ def profile(df: DataFrame, columns: list[str] | None = None,
         cur_n += len(item[2])
     chunks.append(cur)          # also the empty-schema single chunk
 
-    # memoized: jb_report / repeat profiles of the same input reuse the
-    # collected row(s) instead of re-running the scan+agg job
-    from flink_descriptive_stats_spark.functions.memo import agg_row_memoized
+    # memoized on the caller's df: jb_report / repeat profiles of the same
+    # input reuse the collected row(s) instead of re-running the scan+agg
+    # job, and schema_suggestions peeks the same entry (memo.agg_row_peek)
     row: dict = {}
     for chunk in chunks:
-        agg_exprs: list[Column] = [F.count(F.lit(1)).alias("row_count")]
-        for _, _, exprs in chunk:
-            agg_exprs += exprs
-        r = agg_row_memoized(
-            df, agg_exprs,
-            ("profile", tuple(f.name for _, f, _ in chunk)))
+        r = data_memoized(ROWS, df,
+                          ("profile", tuple(f.name for _, f, _ in chunk)),
+                          lambda: _aggregate(df, chunk).collect()[0])
         row.update(r.asDict())
 
     # melt the row into one raw-slot record per column (double_count is the
@@ -208,7 +207,6 @@ def profile(df: DataFrame, columns: list[str] | None = None,
 
 def complete_row_count(df: DataFrame) -> DataFrame:
     """A16: count of rows with every field non-null and non-blank."""
-    return df.agg(
-        F.count(F.lit(1)).alias("row_count"),
-        F.count_if(completeness_expr(df)).alias("complete_count"),
-    )
+    complete = completeness_expr(df)
+    return df.selectExpr("count(1) AS row_count",
+                         f"count_if({complete}) AS complete_count")

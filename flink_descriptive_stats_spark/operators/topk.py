@@ -28,12 +28,11 @@ order is nondeterministic (SURVEY.md §2.6 item 6).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_descriptive_stats_spark.functions import scalar
-from flink_descriptive_stats_spark.functions.memo import exprs_memoized
 
 
 def string_columns(df: DataFrame) -> list[str]:
@@ -50,29 +49,24 @@ def topk_tokens(df: DataFrame, columns: list[str] | None = None,
     if not cols:
         raise ValueError("no string columns to profile")
 
-    # built once per session and column list (memo.exprs_memoized): the
-    # two structs cost ~150 py4j round trips per column, ~70 of them for
-    # the pattern chain
-    melt = exprs_memoized(("topk_melt", tuple(cols)), lambda: _melt(cols))
-    melted = (df.select(*melt).select("s.*")
-              .where(F.col("token").isNotNull()))  # P3: null filter
-
+    melted = (df.selectExpr(_melt(cols))
+              .where("token IS NOT NULL"))          # P3: null filter
     counts = melted.groupBy("kind", "column", "token").agg(
-        F.count(F.lit(1)).alias("cnt"))
+        F.expr("count(1) AS cnt"))
     return _rank_topk(counts, ["kind", "column"], k)
 
 
-def _melt(cols: list[str]) -> list[Column]:
-    """The one explode of both token kinds: per column, a (kind='value',
-    column, token) and a (kind='pattern', column, pattern(token)) struct."""
+def _melt(cols: list[str]) -> str:
+    """The one explode of both token kinds, as Spark SQL text: per column,
+    a (kind='value', column, token) and a (kind='pattern', column,
+    pattern(token)) struct."""
     structs = []
     for c in cols:
-        for kind, token in (("value", F.col(c)),
-                            ("pattern", scalar.pattern_expr(F.col(c)))):
-            structs.append(F.struct(F.lit(kind).alias("kind"),
-                                    F.lit(c).alias("column"),
-                                    token.alias("token")))
-    return [F.explode(F.array(*structs)).alias("s")]
+        x = scalar.ident(c)
+        for kind, token in (("value", x), ("pattern", scalar.pattern_expr(x))):
+            structs.append(f"named_struct('kind', '{kind}', "
+                           f"'column', {scalar.sql_str(c)}, 'token', {token})")
+    return f"inline(array({', '.join(structs)}))"
 
 
 def topk_as_maps(df: DataFrame, columns: list[str] | None = None,
@@ -82,9 +76,8 @@ def topk_as_maps(df: DataFrame, columns: list[str] | None = None,
     group, mirroring the reference's ReduceTopStrings/ReduceTopPatterns
     (ProfileJob.java:218-248) without its fake global group."""
     top = topk_tokens(df, columns, k)
-    return (top.groupBy("kind", "column")
-            .agg(F.map_from_entries(
-                F.collect_list(F.struct("token", "cnt"))).alias("top")))
+    return top.groupBy("kind", "column").agg(
+        F.expr("map_from_entries(collect_list(struct(token, cnt))) AS top"))
 
 
 def _rank_topk(counts: DataFrame, partition_cols: list[str],
@@ -94,10 +87,11 @@ def _rank_topk(counts: DataFrame, partition_cols: list[str],
     WindowGroupLimit before the exchange, bounding every partition's
     contribution to K rows per group. One implementation so the global and
     grouped top-K can never diverge on tie-break or pushdown shape."""
-    w = Window.partitionBy(*partition_cols).orderBy(
-        F.col("cnt").desc(), F.col("token").asc())
-    return (counts.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    parts = ", ".join(scalar.ident(c) for c in partition_cols)
+    return (counts.selectExpr(
+        "*", f"row_number() OVER (PARTITION BY {parts} "
+             f"ORDER BY cnt DESC, token ASC) AS `rank`")
+        .where(f"`rank` <= {k}"))
 
 
 def grouped_topk_tokens(df: DataFrame, key_col: str = "lang",

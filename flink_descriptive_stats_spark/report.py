@@ -55,16 +55,15 @@ def jb_report(profile_df: DataFrame) -> DataFrame:
     """D8 as data: per profiled column, the Jarque-Bera score and the
     H0-normality verdict at each chi-square(df=2) critical level. Built on
     profile() output; the sig6-rendered jb_score string parses straight
-    back to DOUBLE identically in both engines, so verdicts can't drift."""
-    from pyspark.sql import functions as F
-    jb = F.col("jb_score").cast("double")
-    cols = [F.col("column"), F.col("jb_score")]
-    for crit, alpha in JB_CRITICAL:
-        verdict = (F.when(jb.isNull(), F.lit(None).cast("string"))
-                   .when(jb > crit, F.lit("REJECTED"))
-                   .otherwise(F.lit("ACCEPTED")))
-        cols.append(verdict.alias(f"h0_at_{alpha.replace('.', '_')}"))
-    return (profile_df.where(F.col("numeric_count") > 0).select(*cols))
+    back to DOUBLE identically in both engines, so verdicts can't drift.
+    Spark SQL text, applied with one ``selectExpr``."""
+    jb = "CAST(jb_score AS DOUBLE)"
+    verdicts = [f"CASE WHEN {jb} IS NULL THEN CAST(NULL AS STRING) "
+                f"WHEN {jb} > {crit!r}D THEN 'REJECTED' ELSE 'ACCEPTED' END "
+                f"AS h0_at_{alpha.replace('.', '_')}"
+                for crit, alpha in JB_CRITICAL]
+    return (profile_df.where("numeric_count > 0")
+            .selectExpr("`column`", "jb_score", *verdicts))
 
 
 def jb_report_sql(table: str) -> str:

@@ -17,6 +17,7 @@ from pyspark.sql import types as T
 
 from flink_descriptive_stats_spark.functions.memo import (SCHEMAS,
                                                           files_identity)
+from flink_descriptive_stats_spark.functions.scalar import ident
 
 
 def _parquet_schema(spark: SparkSession, path: str) -> T.StructType:
@@ -50,11 +51,11 @@ def normalize_table(df: DataFrame, table: str) -> DataFrame:
             # nanos-as-long: integer division (nanos exceed double's 53-bit
             # mantissa, FP division would corrupt timestamps)
             converted[f.name] = F.timestamp_micros(
-                F.expr(f"`{f.name}` div 1000"))
+                F.expr(f"{ident(f.name)} div 1000"))
         elif isinstance(f.dataType, T.TimestampNTZType):
             # Session TZ is pinned to UTC, so NTZ wall time == the UTC
             # instant; normalizing to TimestampType keeps one code path.
-            converted[f.name] = F.col(f.name).cast("timestamp")
+            converted[f.name] = F.col(ident(f.name)).cast("timestamp")
     return df.withColumns(converted) if converted else df
 
 

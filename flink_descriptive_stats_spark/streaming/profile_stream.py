@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
+from flink_descriptive_stats_spark.functions.scalar import (
+    ident, is_numeric_type, sql_str)
 from flink_descriptive_stats_spark.operators import moments
 
 # Derived stats exposed per window — kept to the core set so the per-window
@@ -36,33 +38,34 @@ _SLOT_NAMES = {"null_count": "null_count", "n": "numeric_count",
                **{s: s for s in moments.MOMENT_SLOTS}}
 
 
-def _long_profile(grouped: GroupedData, lead: dict[str, Column],
+def _long_profile(grouped: GroupedData, lead: dict[str, str],
                   value_cols: list[str]) -> DataFrame:
     """One aggregation pass of per-column moment bundles over ``grouped``,
     melted AFTER aggregation (groups x columns rows, tiny at any input
     scale) into one row per (group, column) and finished by
-    ``moments.finish``: the ``lead`` group columns (output name ->
-    expression over the aggregate), column, _KEEP, WINDOW_STATS."""
-    aggs = [F.count(F.lit(1)).alias("row_count")]
+    ``moments.finish``: the ``lead`` group columns (output name -> SQL
+    expression over the aggregate), column, _KEEP, WINDOW_STATS. Every
+    expression is Spark SQL text."""
+    aggs = ["count(1) AS row_count"]
     for i, c in enumerate(value_cols):
-        x = F.col(c).cast("double")
+        x = f"CAST({ident(c)} AS DOUBLE)"
         p = f"c{i}__"
-        aggs.append(F.count_if(x.isNull()).alias(f"{p}null_count"))
+        aggs.append(f"count_if({x} IS NULL) AS {p}null_count")
         aggs += moments.numeric_agg_exprs(x, p)
-    structs = [F.struct(F.lit(c).alias("column"),
-                        *[F.col(f"c{i}__{s}").alias(name)
-                          for s, name in _SLOT_NAMES.items()])
-               for i, c in enumerate(value_cols)]
-    raw = grouped.agg(*aggs).select(*[c.alias(n) for n, c in lead.items()],
-                                    "row_count", F.inline(F.array(*structs)))
+    structs = ", ".join(
+        f"named_struct('column', {sql_str(c)}, "
+        + ", ".join(f"'{name}', c{i}__{s}" for s, name in _SLOT_NAMES.items())
+        + ")" for i, c in enumerate(value_cols))
+    raw = grouped.agg(*[F.expr(a) for a in aggs]).selectExpr(
+        *[f"{e} AS {ident(n)}" for n, e in lead.items()], "row_count",
+        f"inline(array({structs}))")
     return moments.finish(raw, [*lead, "column", *_KEEP, *WINDOW_STATS],
                           WINDOW_STATS)
 
 
-def _window_bounds(extra_keys: list[str] = ()) -> dict[str, Column]:
-    return {"window_start": F.col("win.start"),
-            "window_end": F.col("win.end"),
-            **{k: F.col(k) for k in extra_keys}}
+def _window_bounds(extra_keys: list[str] = ()) -> dict[str, str]:
+    return {"window_start": "win.start", "window_end": "win.end",
+            **{k: ident(k) for k in extra_keys}}
 
 
 def windowed_profile(df: DataFrame, ts_col: str = "ts",
@@ -76,14 +79,16 @@ def windowed_profile(df: DataFrame, ts_col: str = "ts",
     streaming DataFrames (same plan; streaming adds incremental state)."""
     if watermark:
         df = df.withWatermark(ts_col, watermark)
+    ts = F.col(ident(ts_col))
     if session_gap:
-        win: Column = F.session_window(F.col(ts_col), session_gap)
+        win: Column = F.session_window(ts, session_gap)
     elif slide:
-        win = F.window(F.col(ts_col), window, slide)
+        win = F.window(ts, window, slide)
     else:
-        win = F.window(F.col(ts_col), window)
-    return _long_profile(df.groupBy(win.alias("win"), *(extra_keys or [])),
-                         _window_bounds(extra_keys or []),
+        win = F.window(ts, window)
+    keys = extra_keys or []
+    grouped = df.groupBy(win.alias("win"), *[F.col(ident(k)) for k in keys])
+    return _long_profile(grouped, _window_bounds(keys),
                          [value_col]).drop("column")
 
 
@@ -101,15 +106,13 @@ def windowed_profile_multi(df: DataFrame, ts_col: str = "ts",
     window key), then an inline of per-column structs — the melt happens
     AFTER aggregation on windows x columns rows, which is tiny at any input
     scale."""
-    from flink_descriptive_stats_spark.functions import scalar
     if watermark:
         df = df.withWatermark(ts_col, watermark)
     if value_cols is None:
         value_cols = [f.name for f in df.schema.fields
-                      if f.name != ts_col
-                      and scalar.is_numeric_type(f.dataType)]
+                      if f.name != ts_col and is_numeric_type(f.dataType)]
     return _long_profile(
-        df.groupBy(F.window(F.col(ts_col), window).alias("win")),
+        df.groupBy(F.window(F.col(ident(ts_col)), window).alias("win")),
         _window_bounds(), value_cols)
 
 
@@ -118,13 +121,11 @@ def grouped_profile_multi(df: DataFrame, keys: list[str],
     """Per-group profile of SEVERAL numeric columns in one aggregation pass
     (grouped analogue of windowed_profile_multi): long format, one row per
     (group, column)."""
-    from flink_descriptive_stats_spark.functions import scalar
     if value_cols is None:
         value_cols = [f.name for f in df.schema.fields
-                      if f.name not in keys
-                      and scalar.is_numeric_type(f.dataType)]
-    return _long_profile(df.groupBy(*keys), {k: F.col(k) for k in keys},
-                         value_cols)
+                      if f.name not in keys and is_numeric_type(f.dataType)]
+    return _long_profile(df.groupBy(*[F.col(ident(k)) for k in keys]),
+                         {k: ident(k) for k in keys}, value_cols)
 
 
 def grouped_profile(df: DataFrame, keys: list[str],

@@ -24,10 +24,9 @@ def test_profile_agg_single_pass(spark):
     final HashAggregate. More exchanges = someone broke the single-pass
     design; more scans = per-column fan-out crept back in."""
     li = load_table(spark, SF_DIR, "lineitem")
-    agg_exprs = [F.count(F.lit(1)).alias("row_count")]
-    for i, f in enumerate(li.schema.fields):
-        agg_exprs += prof._agg_exprs_for_column(i, f.name, f.dataType)
-    plan = _formatted_plan(li.agg(*agg_exprs))
+    chunk = [(i, f, prof._column_slots(i, f))
+             for i, f in enumerate(li.schema.fields)]
+    plan = _formatted_plan(prof._aggregate(li, chunk))
     assert plan.count("Exchange") == 2        # node + detail section
     assert plan.count("Scan parquet") == 2    # one scan (listed twice)
     assert plan.count("HashAggregate") >= 2   # partial + final

@@ -7,10 +7,6 @@ are promoted into the window; ten per-family duplicates are demoted to 51+
 (each family keeps a gated sibling — see the demotion notes in
 ``__spark_entry__.queries``)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_gated_window_is_exactly_gated50():
     import __spark_entry__ as m

@@ -183,6 +183,7 @@ def test_cli_new_subcommands_parse():
 def test_cli_monitor_drift_end_to_end(tmp_path):
     """monitor-drift CLI over a growing directory: processes available
     files, writes the cumulative PSI/JSD report, exits 0."""
+    import os
     import shutil
     import subprocess
     import sys
@@ -198,7 +199,8 @@ def test_cli_monitor_drift_end_to_end(tmp_path):
          "--sink", str(tmp_path / "sink"),
          "--state", str(tmp_path / "state"),
          "--checkpoint", str(tmp_path / "ckpt")],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300)
+        capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     assert r.returncode == 0, r.stderr[-2000:]
     # reference == live -> every psi/jsd term is exactly zero
     assert "0e0" in r.stdout

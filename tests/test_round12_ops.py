@@ -308,7 +308,8 @@ def test_embedding_neardup_block_derivation_one_job_then_memo(spark):
 def test_bench_fold_skips_currently_failing_queries():
     import importlib.util
     spec = importlib.util.spec_from_file_location(
-        "bench", "/root/repo/bench.py")
+        "bench", os.path.join(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))), "bench.py"))
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
     times = {"a": 2.0, "b": -1.0, "c": 5.0}

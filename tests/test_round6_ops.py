@@ -370,10 +370,9 @@ def test_profile_wide_frame_single_pass(spark):
     assert len(wide.columns) == 250
 
     # plan: single aggregation pass over one scan
-    agg_exprs = [F.count(F.lit(1)).alias("row_count")]
-    for i, f in enumerate(wide.schema.fields):
-        agg_exprs += prof._agg_exprs_for_column(i, f.name, f.dataType)
-    plan = wide.agg(*agg_exprs)._jdf.queryExecution().explainString(
+    chunk = [(i, f, prof._column_slots(i, f))
+             for i, f in enumerate(wide.schema.fields)]
+    plan = prof._aggregate(wide, chunk)._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode
         .fromString("formatted"))
     assert plan.count("Exchange") == 2        # ONE exchange (node+detail)
@@ -452,7 +451,7 @@ def test_decimal_length_high_scale_three_way(spark):
         df = spark.createDataFrame([(v,) for v in pyvals],
                                    T.StructType([T.StructField("x", dt)]))
         got_spark = [r[0] for r in
-                     df.select(scalar.length_expr("x", dt)).collect()]
+                     df.selectExpr(scalar.length_expr("x", dt)).collect()]
         dexpr = scalar.duck_length_expr("x", dt)
         got_duck = [r[0] for r in con.execute(
             f"SELECT {dexpr} FROM (SELECT unnest(?::DECIMAL(38,{scale})[]) "

@@ -8,9 +8,9 @@ from pyspark.sql import functions as F
 from flink_descriptive_stats_spark.functions import scalar
 
 
-def _eval(spark, col_expr, values):
+def _eval(spark, sql, values):
     df = spark.createDataFrame([Row(s=v) for v in values])
-    return [r[0] for r in df.select(col_expr).collect()]
+    return [r[0] for r in df.selectExpr(sql).collect()]
 
 
 def test_pattern_generation(spark):
@@ -24,7 +24,7 @@ def test_pattern_generation(spark):
         "x\ty": "aba",           # tab -> b
         "€12": "?##",            # unknown char -> ?
     }
-    got = _eval(spark, scalar.pattern_expr(F.col("s")), list(cases))
+    got = _eval(spark, scalar.pattern_expr("s"), list(cases))
     assert got == list(cases.values())
 
 
@@ -32,7 +32,7 @@ def test_pattern_matches_duckdb(spark):
     import duckdb
     values = ["ABCDEF00X30A333Y", "Hello World3", "a-b/c:d.e'f#g", "Café",
               "x\ty", "€12", "Customer#000000042", ""]
-    got_spark = _eval(spark, scalar.pattern_expr(F.col("s")), values)
+    got_spark = _eval(spark, scalar.pattern_expr("s"), values)
     con = duckdb.connect()
     expr = scalar.duck_pattern_expr("s")
     got_duck = [
@@ -45,15 +45,15 @@ def test_pattern_matches_duckdb(spark):
 def test_bool_parse_quirk(spark):
     # Boolean.parseBoolean: only "true" (any case) counts; "false" does NOT.
     vals = ["true", "TRUE", "True", "false", "FALSE", "yes", "1", ""]
-    got = _eval(spark, scalar.parses_bool_expr(F.col("s")), vals)
+    got = _eval(spark, scalar.parses_bool_expr("s"), vals)
     assert got == [True, True, True, False, False, False, False, False]
 
 
 def test_int_long_parse(spark):
     vals = ["3", "+5", "-7", "03", "3.5", "3e2", " 3", "", "abc",
             "2147483647", "2147483648", "9999999999", "99999999999999999999"]
-    got_int = _eval(spark, scalar.parses_int_expr(F.col("s")), vals)
-    got_long = _eval(spark, scalar.parses_long_expr(F.col("s")), vals)
+    got_int = _eval(spark, scalar.parses_int_expr("s"), vals)
+    got_long = _eval(spark, scalar.parses_long_expr("s"), vals)
     #                 3     +5    -7    03    3.5    3e2    " 3"   ""
     assert got_int == [True, True, True, True, False, False, False, False,
                        False, True, False, False, False]
@@ -64,7 +64,7 @@ def test_int_long_parse(spark):
 def test_float_parse(spark):
     vals = ["3", "3.5", ".5", "3.", "3e2", "1E-5", "3.5f", "2d", "NaN",
             "Infinity", "-Infinity", " 3.5 ", "abc", "", "3,5", "0x1.8p1"]
-    got = _eval(spark, scalar.parses_float_expr(F.col("s")), vals)
+    got = _eval(spark, scalar.parses_float_expr("s"), vals)
     want = [True, True, True, True, True, True, True, True, True,
             True, True, True, False, False, False, True]
     assert got == want
@@ -88,7 +88,7 @@ def test_float_parse_hex_and_trim(spark):
         "3\x1f5": False,     # interior control char never trimmed
     }
     vals = list(cases)
-    got = _eval(spark, scalar.parses_float_expr(F.col("s")), vals)
+    got = _eval(spark, scalar.parses_float_expr("s"), vals)
     assert got == list(cases.values())
     con = duckdb.connect()
     expr = scalar.duck_parses_float("s")
@@ -102,7 +102,7 @@ def test_date_parse(spark):
     vals = ["2020-01-01", "20200101", "2020/01/01", "01/02/2020",
             "01-02-2020", "12/31/2020", "31/12/2020", "2020-02-30",
             "2020-13-01", "2020-1-1", "not a date", "99999999"]
-    got = _eval(spark, scalar.parses_date_expr(F.col("s")), vals)
+    got = _eval(spark, scalar.parses_date_expr("s"), vals)
     want = [True, True, True, True,
             True,
             True,   # MM/dd/yyyy
@@ -119,7 +119,7 @@ def test_date_parse_matches_duckdb(spark):
     vals = ["2020-01-01", "20200101", "2020/01/01", "01/02/2020",
             "01-02-2020", "12/31/2020", "31/12/2020", "2020-02-30",
             "2020-13-01", "2020-1-1", "not a date", "99999999", "00010101"]
-    got_spark = _eval(spark, scalar.parses_date_expr(F.col("s")), vals)
+    got_spark = _eval(spark, scalar.parses_date_expr("s"), vals)
     con = duckdb.connect()
     expr = scalar.duck_parses_date("s")
     got_duck = [
@@ -131,18 +131,20 @@ def test_date_parse_matches_duckdb(spark):
 
 def test_blank(spark):
     vals = ["", "  ", " x ", "x", None]
-    got = _eval(spark, scalar.is_blank_expr(F.col("s")), vals)
+    got = _eval(spark, scalar.is_blank_expr("s"), vals)
     assert got == [True, True, False, False, False]
 
 
 def test_sig6_cross_engine_ties(spark):
     """The motivating case: 333333.25 ties at the 7th significant digit."""
     import duckdb
-    from flink_descriptive_stats_spark.functions.sig import duck_sig6, sig6
+    from flink_descriptive_stats_spark.functions.sig import (
+        duck_sig6, sig6, sig6_sql)
     vals = [333333.25, 0.0, -0.0, 1.0, -1.5, 1e-7, 123456789.0,
             2.5000005e-3, 9999999.5, -9999999.5, 1e21, 4.0 / 3.0]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
     got_spark = [r[0] for r in df.select(sig6(F.col("x"))).collect()]
+    got_sql = [r[0] for r in df.selectExpr(sig6_sql("x")).collect()]
     con = duckdb.connect()
     got_duck = [
         con.execute(
@@ -150,20 +152,20 @@ def test_sig6_cross_engine_ties(spark):
             [v]).fetchone()[0]
         for v in vals
     ]
-    assert got_spark == got_duck
+    assert got_spark == got_sql == got_duck
     assert got_spark[0] == "3333333e-1"  # half-up/away, not banker's
     assert got_spark[1] == "0e0" and got_spark[2] == "0e0"
 
 
 def test_sig6_three_way_property(spark):
-    """Property: sig6 (Spark), duck_sig6 (DuckDB) and sig6_py (Python)
-    agree on arbitrary doubles — the foundation of the whole oracle
-    strategy. Hypothesis drives the values; evaluation is batched per
-    engine to keep the test fast."""
+    """Property: sig6 (Spark Column), sig6_sql (Spark SQL text), duck_sig6
+    (DuckDB) and sig6_py (Python) agree on arbitrary doubles — the
+    foundation of the whole oracle strategy. Hypothesis drives the values;
+    evaluation is batched per engine to keep the test fast."""
     import duckdb
     from hypothesis import given, settings, strategies as st
     from flink_descriptive_stats_spark.functions.sig import (
-        duck_sig6, sig6, sig6_py)
+        duck_sig6, sig6, sig6_py, sig6_sql)
 
     collected: list[float] = []
 
@@ -178,13 +180,15 @@ def test_sig6_three_way_property(spark):
 
     df = spark.createDataFrame([(v,) for v in vals], "x double")
     got_spark = [r[0] for r in df.select(sig6(F.col("x"))).collect()]
+    got_sql = [r[0] for r in df.selectExpr(sig6_sql("x")).collect()]
     con = duckdb.connect()
     got_duck = [r[0] for r in con.execute(
         f"SELECT {duck_sig6('x')} FROM (SELECT unnest(?::DOUBLE[]) AS x)",
         [vals]).fetchall()]
     got_py = [sig6_py(v) for v in vals]
-    for v, s, d, p in zip(vals, got_spark, got_duck, got_py):
-        assert s == d == p, f"x={v!r}: spark={s} duck={d} py={p}"
+    for v, s, q, d, p in zip(vals, got_spark, got_sql, got_duck, got_py):
+        assert s == q == d == p, (
+            f"x={v!r}: spark={s} sql={q} duck={d} py={p}")
 
 
 def test_fp_display_length_three_way_property(spark):
@@ -214,8 +218,8 @@ def test_fp_display_length_three_way_property(spark):
 
     df = spark.createDataFrame(
         [(v,) for v in vals + [v for _, v, _ in specials]], "x double")
-    got_spark = [r[0] for r in
-                 df.select(scalar.length_expr("x", T.DoubleType())).collect()]
+    got_spark = [r[0] for r in df.select(
+        scalar.fp_length_col("x", T.DoubleType())).collect()]
     con = duckdb.connect()
     dexpr = scalar.duck_length_expr("x", T.DoubleType())
     got_duck = [r[0] for r in con.execute(
@@ -243,8 +247,8 @@ def test_fp_display_length_float_and_decimal(spark):
              [1.5, 0.1, 123.456, 100000.0, 1e-7, 0.25, 1234567.5,
               3.4028235e38, 1.1754944e-38, -42.42]]
     df = spark.createDataFrame([(v,) for v in fvals], "x float")
-    got_spark = [r[0] for r in
-                 df.select(scalar.length_expr("x", T.FloatType())).collect()]
+    got_spark = [r[0] for r in df.select(
+        scalar.fp_length_col("x", T.FloatType())).collect()]
     con = duckdb.connect()
     fexpr = scalar.duck_length_expr("x", T.FloatType())
     for v, s in zip(fvals, got_spark):
@@ -256,8 +260,8 @@ def test_fp_display_length_float_and_decimal(spark):
     ddf = (spark.createDataFrame(
         [("0.50",), ("-0.50",), ("12.34",), ("0.00",), (None,)], "s string")
         .selectExpr("cast(s as decimal(10,2)) as x"))
-    got = [r[0] for r in
-           ddf.select(scalar.length_expr("x", T.DecimalType(10, 2))).collect()]
+    got = [r[0] for r in ddf.selectExpr(
+        scalar.length_expr("x", T.DecimalType(10, 2))).collect()]
     assert got == [3, 4, 5, 3, None]
 
 
@@ -299,7 +303,7 @@ def test_pattern_accent_fold_matches_stripaccents(spark):
              "ǍǏǑǕǞ", "plain text 1.5/x:y-z'q"]
     df = spark.createDataFrame([(t,) for t in tests], "s string")
     got_spark = [r[0] for r in
-                 df.select(scalar.pattern_expr(F.col("s"))).collect()]
+                 df.selectExpr(scalar.pattern_expr("s")).collect()]
     con = duckdb.connect()
     dexpr = scalar.duck_pattern_expr("s")
     for t, sp in zip(tests, got_spark):
@@ -327,8 +331,8 @@ def test_fp_display_length_float_property(spark):
 
     gather()
     df = spark.createDataFrame([(v,) for v in collected], "x float")
-    got_spark = [r[0] for r in
-                 df.select(scalar.length_expr("x", T.FloatType())).collect()]
+    got_spark = [r[0] for r in df.select(
+        scalar.fp_length_col("x", T.FloatType())).collect()]
     con = duckdb.connect()
     fexpr = scalar.duck_length_expr("x", T.FloatType())
     got_duck = [r[0] for r in con.execute(
@@ -399,7 +403,7 @@ def test_decimal_length_scientific_three_way(spark):
         df = spark.createDataFrame([(v,) for v in pyvals],
                                    T.StructType([T.StructField("x", dt)]))
         got_spark = [r[0] for r in
-                     df.select(scalar.length_expr("x", dt)).collect()]
+                     df.selectExpr(scalar.length_expr("x", dt)).collect()]
         dexpr = scalar.duck_length_expr("x", dt)
         got_duck = [r[0] for r in con.execute(
             f"SELECT {dexpr} FROM (SELECT unnest(?::DECIMAL(38,{scale})[]) "

@@ -1,13 +1,9 @@
 """Round-5 session-3 operators: canonical dedup, keep-best dedup, and the
 PPJoin-style prefix-filtered exact Jaccard join."""
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from flink_descriptive_stats_spark.operators import dedup  # noqa: E402
+from flink_descriptive_stats_spark.operators import dedup
 
 
 @pytest.fixture(scope="session")

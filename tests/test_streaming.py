@@ -3,6 +3,8 @@ same data (SURVEY.md §5.5) — the algebraic aggregate bundle is incremental
 by construction, so streaming state must reproduce the batch result exactly.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,7 +16,8 @@ from flink_descriptive_stats_spark.streaming.profile_stream import (
 SF_DIR = "/root/testdata/sf0.001"
 # readStream needs a *directory* source; expose the single parquet file
 # through a gitignored scratch dir via symlink.
-STREAM_DIR = "/root/repo/scratch/stream_events"
+STREAM_DIR = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "scratch", "stream_events")
 
 
 def _events_stream(spark):
@@ -396,8 +399,6 @@ def test_streaming_throughput_and_bounded_state(spark, tmp_path):
     and the dedup holds only the keys inside its 1-hour horizon, both
     orders of magnitude below the input row count. tools/stream_bench.py
     runs the same harness at sf0.1 for the recorded numbers."""
-    import sys
-    sys.path.insert(0, "/root/repo")
     from tools.stream_bench import run_stream_bench
     res = run_stream_bench(spark, "/root/testdata/sf0.01",
                            str(tmp_path), n_files=4, files_per_trigger=2)

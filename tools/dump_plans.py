@@ -9,7 +9,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TAG = os.environ.get("SPARK_GRAFT_PLAN_TAG", "r14")
 
@@ -18,7 +19,7 @@ def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2].split(",")
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
-    outdir = f"/root/repo/plans/{TAG}"
+    outdir = f"{ROOT}/plans/{TAG}"
     os.makedirs(outdir, exist_ok=True)
 
     import __spark_entry__ as entrymod

@@ -34,9 +34,8 @@ def main() -> None:
     sections = []
 
     li = load_table(spark, SF, "lineitem")
-    aggs = [F.count(F.lit(1)).alias("row_count")]
-    for i, f in enumerate(li.schema.fields):
-        aggs += prof._agg_exprs_for_column(i, f.name, f.dataType)
+    chunk = [(i, f, prof._column_slots(i, f))
+             for i, f in enumerate(li.schema.fields)]
     sections.append((
         "Whole-table profile (flagship)",
         "ONE scan, partial HashAggregate per partition, a single-row "
@@ -44,7 +43,7 @@ def main() -> None:
         "display-length ArrowEval (one\nbatch expression; everything else "
         "is whole-stage codegen). At 100 TB the\nshuffle moves one row of "
         "aggregate state per partition.",
-        fmt(spark, li.agg(*aggs))))
+        fmt(spark, prof._aggregate(li, chunk))))
 
     sections.append((
         "Top-K values + patterns (multiplexed)",

@@ -20,7 +20,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
     "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -31,7 +32,7 @@ def pick_queries(arg: str, qs: dict) -> list[str]:
     if arg.startswith("slowest"):
         n = int(arg[len("slowest"):] or "30")
         import glob
-        files = sorted(glob.glob("/root/repo/.benchmarks/bench_*_sf0.1.json"))
+        files = sorted(glob.glob(f"{ROOT}/.benchmarks/bench_*_sf0.1.json"))
         snap = json.load(open(files[-1]))
         times = {k: v for k, v in snap["queries"].items()
                  if v >= 0 and k in qs}

@@ -11,11 +11,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BASELINE = (sys.argv[2] if len(sys.argv) > 2 else
-            sorted(glob.glob("/root/repo/.benchmarks/bench_*_sf0.1.json"))[-1])
+            sorted(glob.glob(f"{ROOT}/.benchmarks/bench_*_sf0.1.json"))[-1])
 
 
 def main() -> None:

@@ -4,6 +4,7 @@ Spark at sf0.01, run the oracle SQL on DuckDB, compare row count, schema
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -11,7 +12,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
 TABLES = ("region nation customer supplier part orders lineitem events "
