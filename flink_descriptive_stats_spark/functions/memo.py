@@ -4,7 +4,8 @@ Several operators end in "collect ONE row of aggregates, post-process
 driver-side" (profile, quantiles, outlier fences, distinct counts); others
 build a Column, read a parquet footer, train a model or label near-duplicate
 clusters. When a second query needs the same result over the
-same input — jb_report after profile, a repeat profile of an unchanged
+same input — complete_row_count and schema_suggestions after profile, all
+three reading the one table aggregate, or a repeat profile of an unchanged
 file — that work is pure repeat. One ``Memo`` class serves every kind: a
 bounded LRU dict under one lock, one instance per kind of value.
 
@@ -14,7 +15,7 @@ owner that reuses a dead one's id(). A data entry is keyed by the analyzed
 plan's semantic hash, the caller's tag and the (path, size, mtime_ns) of
 every input file (``DataFrame.inputFiles()``): the plan hash covers a
 file's path but not its contents, so without the file identity a file
-rewritten at the same path would be served stale. A lookup costs 6 + 2 per
+rewritten at the same path would be served stale. A lookup costs 4 + 2 per
 input file py4j calls and one ``os.stat`` per file. An input behind a
 non-``file:`` URI cannot be stat'ed: it gets no key and runs uncached, as
 does a plan whose hash is unavailable. Schemas key on the files under the
@@ -134,7 +135,7 @@ def data_key(df: DataFrame, tag: tuple) -> tuple | None:
     """(plan semantic hash, input-file identity, tag); None when the input
     has no sound identity."""
     try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
+        h = df.semanticHash()           # the analyzed plan's
         ident = files_identity(df.inputFiles())
     except Exception:
         return None
@@ -163,11 +164,3 @@ def agg_row_memoized(df: DataFrame, agg_exprs: list[Column], tag: tuple):
     return data_memoized(ROWS, df, tag,
                          lambda: df.agg(*agg_exprs).collect()[0])
 
-
-def agg_row_peek(df: DataFrame, tag: tuple):
-    """Return the memoized row for (df, tag) if present, else None —
-    NEVER computes. For operators that can consume a richer bundle when
-    another operator already paid for it, but should run their own lean
-    aggregate otherwise (e.g. schema_suggestions reading the profile's
-    counters only when profile() already ran on this exact input)."""
-    return ROWS.peek(df.sparkSession, data_key(df, tag))

@@ -70,9 +70,11 @@ def sig6(c: Column) -> Column:
 
 def sig6_sql(x: str) -> str:
     """:func:`sig6` as Spark SQL text over the double expression ``x``
-    (best a column reference: the text repeats it). The same arithmetic,
-    with the overflow renormalization folded into one branch: its parse
-    cost grows with the text."""
+    (best a column reference or a lambda variable: the text repeats it
+    ~7x). The same arithmetic, with the overflow renormalization folded
+    into one branch. Render many statistics with one copy, through
+    ``transform`` over their array (``operators.moments.finish``): each
+    copy costs a parse."""
     y = f"({x} * {NUDGE!r}D)"
     e = f"floor(log10(abs({y})))"                 # floor(double) is BIGINT
     m = f"CAST(round({y} / pow(10.0D, {e} - 6), 0) AS BIGINT)"

@@ -1609,21 +1609,13 @@ def schema_suggestions(df: DataFrame) -> DataFrame:
     only for the 'string' fallback, where it reports the best partial
     candidate's share).
 
-    READS the profile's memoized aggregate row when one exists for this
-    exact input: the latent-type counters here (Java-strict parse
-    count_ifs) are exactly the profile's A11 counters, so after
-    ``profile(df)`` this is a zero-job driver-side re-read (bench: 4.5s
-    -> 0.9s on the raw-table path). When no profile row is memoized it
-    runs its OWN lean aggregate — 5 counters per string column, not the
-    profile's full 11-agg bundle — so the cold path costs what the
-    counters cost, nothing more (an always-share design measured 50%
-    SLOWER cold, and the gated query profiles a derived stringified
-    frame that can never share)."""
+    READS the table aggregate that ``profile`` reads (operators.profile
+    ``_table_row``): its latent-type counters are these Java-strict parse
+    counts. After ``profile(df)`` this runs no Spark job; called first, it
+    runs the one aggregate that a later ``profile(df)`` reuses."""
     import pyarrow as pa
     from pyspark.sql import types as T
-    from flink_descriptive_stats_spark.functions.memo import (
-        ROWS, agg_row_peek, data_memoized)
-    from flink_descriptive_stats_spark.functions.sig import sig6_py
+    from flink_descriptive_stats_spark.operators.profile import _table_row
 
     def local_frame(rows: list) -> DataFrame:
         # an Arrow-built local relation: collecting it runs no Spark job
@@ -1633,42 +1625,16 @@ def schema_suggestions(df: DataFrame) -> DataFrame:
                 ("suggested_type", pa.string()), ("n_non_null", pa.int64()),
                 ("parse_rate", pa.string())])))
 
-    fields = list(df.schema.fields)
-    cols = [(i, f.name) for i, f in enumerate(fields)
+    cols = [(i, f.name) for i, f in enumerate(df.schema.fields)
             if isinstance(f.dataType, T.StringType)]
-    if not cols:
-        return local_frame([])
-    prow = agg_row_peek(df, ("profile", tuple(f.name for f in fields)))
-    if prow is not None:
-        def col_counts(i, c):
-            n = int(prow["row_count"]) - int(prow[f"c{i}__nulls"])
-            return n, [("boolean", int(prow[f"c{i}__bool_count"])),
-                       ("bigint", int(prow[f"c{i}__long_count"])),
-                       ("double", int(prow[f"c{i}__float_count"])),
-                       ("date", int(prow[f"c{i}__date_count"]))]
-    else:
-        aggs = []
-        for _, c in cols:
-            x = scalar.ident(c)
-            aggs += [f"count({x}) AS {scalar.ident(c + '__n')}"] + [
-                f"count_if({fn(x)}) AS {scalar.ident(c + suffix)}"
-                for fn, suffix in ((scalar.parses_bool_expr, "__bool"),
-                                   (scalar.parses_long_expr, "__long"),
-                                   (scalar.parses_float_expr, "__dbl"),
-                                   (scalar.parses_date_expr, "__date"))]
-        row = data_memoized(
-            ROWS, df, ("schema_suggestions", tuple(c for _, c in cols)),
-            lambda: df.selectExpr(*aggs).collect()[0])
-
-        def col_counts(i, c):
-            return int(row[f"{c}__n"]), [
-                ("boolean", int(row[f"{c}__bool"])),
-                ("bigint", int(row[f"{c}__long"])),
-                ("double", int(row[f"{c}__dbl"])),
-                ("date", int(row[f"{c}__date"]))]
+    row = _table_row(df) if cols else {}
     out = []
     for i, c in cols:
-        n, counts = col_counts(i, c)
+        n = int(row["row_count"]) - int(row[f"c{i}__nulls"])
+        counts = [("boolean", int(row[f"c{i}__bool_count"])),
+                  ("bigint", int(row[f"c{i}__long_count"])),
+                  ("double", int(row[f"c{i}__float_count"])),
+                  ("date", int(row[f"c{i}__date_count"]))]
         suggested, rate = "string", None
         if n > 0:
             for t, k in counts:

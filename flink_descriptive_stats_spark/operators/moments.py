@@ -34,11 +34,11 @@ Derived statistics (closed-form over the aggregated row, StatsPojo.java:
       count — a reference quirk we replicate, ProfileJob.java:152-160).
 
 One finish (:func:`finish`) applies these expressions, as Spark SQL text,
-then sig6, for every profile: the batch profile over a local relation of
-its melted aggregate row (Catalyst evaluates it while optimizing, so no
-Spark job runs), the windowed and grouped profiles over their per-group
-rows. There is no second, driver-side copy of the formulas; the DuckDB
-oracle is the independent reference.
+then one sig6 over the array of them, for every profile: the batch profile
+over a local relation of its melted aggregate row (Catalyst evaluates it
+while optimizing, so no Spark job runs), the windowed and grouped profiles
+over their per-group rows. There is no second, driver-side copy of the
+formulas; the DuckDB oracle is the independent reference.
 """
 
 from __future__ import annotations
@@ -161,21 +161,30 @@ def finish(raw: DataFrame, columns: list[str],
     ``numeric_count``, ``row_count`` and MOMENT_SLOTS. A name in ``stats``
     is one of DERIVED_STATS, derived from those slots, or a raw double
     column of ``raw`` rendered as it is (the batch profile's ``avg_len``).
-
-    Two ``selectExpr`` stages of SQL text: derive (over attribute
-    references) -> sig6 (which repeats its input ~7x, so it reads the
-    derived attributes, not their nested CASE trees). Catalyst keeps the
-    stages apart: the derived expressions are non-cheap and referenced
-    many times. They run over groups x columns rows, tiny at any scale.
+    The statistics run over groups x columns rows, tiny at any scale.
     """
     d = derived_stats(*[ident(c) for c in (
         "numeric_count", "row_count", *MOMENT_SLOTS)])
-    derive = ([ident(c) for c in columns if c not in stats]
-              + [f"{d.get(s, ident(s))} AS {ident('__d_' + s)}"
-                 for s in stats])
-    render = [f"{sig6_sql(ident('__d_' + c))} AS {ident(c)}" if c in stats
-              else ident(c) for c in columns]
-    return raw.selectExpr(*derive).selectExpr(*render)
+    return _sig6_select(raw, columns, {s: d.get(s, ident(s)) for s in stats})
+
+
+def _sig6_select(df: DataFrame, columns: list[str],
+                 stats: dict[str, str]) -> DataFrame:
+    """``df`` -> ``columns``: a name in ``stats`` is the sig6 rendering of
+    its double SQL expression, every other name is passed through.
+
+    The expressions are derived into one array and rendered by one
+    ``transform`` (sig6 text repeats its input, so it reads the lambda
+    variable, and is parsed once, not once per statistic); a second
+    ``selectExpr`` picks the array's elements. Catalyst keeps the two
+    stages apart: the array is non-cheap and referenced many times."""
+    names = list(stats)
+    return df.selectExpr(
+        *[ident(c) for c in columns if c not in stats],
+        f"transform(array({', '.join(stats.values())}), "
+        f"x -> {sig6_sql('x')}) AS __sig6",
+    ).selectExpr(*[f"__sig6[{names.index(c)}] AS {ident(c)}" if c in stats
+                   else ident(c) for c in columns])
 
 
 # ---------------------------------------------------------------------------
@@ -190,7 +199,10 @@ def profile_state(df, columns: list[str] | None = None):
     sums Spark's CentralMomentAgg maintains internally — recovered
     exactly from the built-in one-pass aggregates (skewness = M3 sqrt(n)
     / M2^1.5, kurtosis = n M4 / M2^2 - 3; M2 = var_pop * n), so the
-    state costs ONE scan with full codegen, not a custom UDAF."""
+    state costs ONE scan with full codegen, not a custom UDAF. The result
+    is a local relation built from Arrow: collecting it runs no Spark
+    job."""
+    import pyarrow as pa
     from flink_descriptive_stats_spark.operators.extras import (
         numeric_columns)
     cols = columns or numeric_columns(df)
@@ -213,9 +225,11 @@ def profile_state(df, columns: list[str] | None = None):
             m3 = m4 = 0.0
         out.append((c, n, mean, m2, m3, m4,
                     float(row[f"{c}__min"]), float(row[f"{c}__max"])))
-    return df.sparkSession.createDataFrame(
-        out, "column string, n bigint, mean double, m2 double, m3 double, "
-             "m4 double, min_val double, max_val double")
+    schema = pa.schema([("column", pa.string()), ("n", pa.int64())] + [
+        (f, pa.float64()) for f in ("mean", "m2", "m3", "m4", "min_val",
+                                    "max_val")])
+    return df.sparkSession.createDataFrame(pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in out], schema=schema))
 
 
 def merge_profile_states(a, b):
@@ -274,6 +288,5 @@ def finalize_profile_state(state):
                     f"/ pow(m2, 1.5D) WHEN n > 0 THEN 0.0D END",
         "kurtosis": f"CASE WHEN n > 0 AND m2 > 0 THEN {n} * m4 / (m2 * m2) "
                     f"- 3.0D WHEN n > 0 THEN 0.0D END"}
-    return state.selectExpr(
-        "`column`", "n", *[f"{sig6_sql(f'({e})')} AS {s}"
-                           for s, e in stats.items()], "min_val", "max_val")
+    return _sig6_select(state, ["column", "n", *stats, "min_val", "max_val"],
+                        {s: f"({e})" for s, e in stats.items()})

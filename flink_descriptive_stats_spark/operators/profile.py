@@ -10,9 +10,12 @@ pass, a single ``selectExpr`` of Spark SQL text:
   parquet scan -> partial HashAggregate (per partition, codegen)
                -> 1-row exchange -> final HashAggregate -> tiny result
 
-The reference's row-completeness side pipeline (RowStatsCollectHelper) is
-``complete_row_count``: a separate one-row aggregate over the same input,
-with its own scan and two Spark jobs, not part of this pass.
+The reference's row-completeness side pipeline (RowStatsCollectHelper)
+rides the same pass as one more ``count_if`` slot, as the reference
+counts complete records inside its one ProfileJob: the memoized row of
+this aggregate (``_table_row``) is the only table-level aggregate of an
+input, read by ``profile``, ``complete_row_count`` and
+``extras.schema_suggestions``.
 
 At 100 TB this is the optimal shape: one pass over the data, the only shuffle
 moves a single row of ~30*N_cols doubles per partition, no skew possible.
@@ -63,11 +66,13 @@ def completeness_expr(df: DataFrame) -> str:
     """A16/S2: a row is "complete" iff every field is non-null and its string
     form is not blank (RowStatsCollectHelper.java:31-38). For non-string
     types the string form is never blank, so only string columns need the
-    trim test — this keeps the predicate cheap and pushdown-friendly."""
+    trim test — this keeps the predicate cheap and pushdown-friendly. A
+    frame without columns has only complete rows."""
     return " AND ".join(
         f"({x} IS NOT NULL AND trim({x}) != '')"
         if isinstance(f.dataType, T.StringType) else f"{x} IS NOT NULL"
-        for f, x in ((f, scalar.ident(f.name)) for f in df.schema.fields))
+        for f, x in ((f, scalar.ident(f.name)) for f in df.schema.fields)
+    ) or "TRUE"
 
 
 #: The projected pandas-UDF display length of float/double column i.
@@ -108,72 +113,73 @@ def _column_slots(i: int, f: T.StructField) -> list[str]:
     return exprs
 
 
+#: Aggregate slots per pass. The generated projection source grows with the
+#: slot count, and its compilation memory faster, so a wider table is
+#: chunked into passes of the same narrow shape; this keeps ~400 columns
+#: in one pass (a 250-column frame is plan-pinned to one exchange).
+MAX_EXPRS_PER_PASS = 4000
+
+
 def _aggregate(df: DataFrame, chunk: list) -> DataFrame:
     """The one-row aggregate of ``chunk``'s (index, field, slots): one
     ``selectExpr``, over ``df`` plus the pandas-UDF lengths of its
-    float/double columns."""
+    float/double columns. The chunk that starts at column 0 also counts
+    the complete rows (A16) as ``complete_count``."""
     fp_lens = {_FP_LEN.format(i): scalar.fp_length_col(f.name, f.dataType)
                for i, f, _ in chunk if scalar.is_fp_type(f.dataType)}
     src = df.withColumns(fp_lens) if fp_lens else df
-    return src.selectExpr("count(1) AS row_count",
-                          *[e for _, _, exprs in chunk for e in exprs])
+    head = ["count(1) AS row_count"]
+    if not chunk or chunk[0][0] == 0:
+        head.append(f"count_if({completeness_expr(df)}) AS complete_count")
+    return src.selectExpr(*head, *[e for _, _, exprs in chunk for e in exprs])
 
 
-def profile(df: DataFrame, columns: list[str] | None = None,
-            max_exprs_per_pass: int = 4000) -> DataFrame:
-    """Profile every (selected) column of ``df`` in one aggregation pass.
-
-    Execution shape: ONE Spark job — scan -> partial HashAggregate ->
-    single-row exchange -> final HashAggregate -> collect of one wide row
-    (memoized per input). That row is melted into a local relation, one
-    row per column, and ``moments.finish`` — the same finish as the
-    windowed and grouped profiles — derives D1-D10 and renders them with
-    sig6 as SQL expressions over it. Spark's ConvertToLocalRelation rule
-    evaluates those projections, and a consumer's filter and projection
-    (jb_report), while it optimizes the plan: collecting the result runs
-    no Spark job and compiles no code. (Inside the aggregate plan, the
-    per-column derived trees would cost seconds of janino compilation and
-    blow the 64KB codegen limit.)
-
-    Ultra-wide schemas: a single pass holds through a few hundred columns
-    (a 250-column frame is plan-pinned to one exchange in
-    tests/test_round6_ops.py), but the generated projection SOURCE grows
-    with the expression count and its compilation memory faster — so past
-    ``max_exprs_per_pass`` aggregate slots the columns are CHUNKED into
-    ceil(n/max) passes, each still the same narrow scan->partial->1-row
-    shape. Each chunk memoizes independently, results merge by column
-    name (the aggregates are per-column independent, so chunked ==
-    single-pass exactly; pytest-pinned). The default keeps ~400 columns
-    in one pass.
-
-    Returns a long-format DataFrame, one row per column, schema
-    ``PROFILE_FIELDS``.
-    """
-    fields = [f for f in df.schema.fields
-              if columns is None or f.name in columns]
-
-    per_field = [(i, f, _column_slots(i, f))
-                 for i, f in enumerate(fields)]
+def _table_row(df: DataFrame) -> dict:
+    """The table aggregate of ``df``, read by ``profile``,
+    ``complete_row_count`` and ``extras.schema_suggestions``:
+    ``row_count``, ``complete_count`` and column i's slots as
+    ``c{i}__<slot>``. One Spark job per chunk of MAX_EXPRS_PER_PASS slots,
+    memoized on ``df`` per chunk; the aggregates are per-column
+    independent, so chunked == single-pass exactly (pytest-pinned)."""
     chunks: list[list] = []
     cur: list = []
     cur_n = 1
-    for item in per_field:
-        if cur and cur_n + len(item[2]) > max_exprs_per_pass:
+    for i, f in enumerate(df.schema.fields):
+        slots = _column_slots(i, f)
+        if cur and cur_n + len(slots) > MAX_EXPRS_PER_PASS:
             chunks.append(cur)
             cur, cur_n = [], 1
-        cur.append(item)
-        cur_n += len(item[2])
+        cur.append((i, f, slots))
+        cur_n += len(slots)
     chunks.append(cur)          # also the empty-schema single chunk
 
-    # memoized on the caller's df: jb_report / repeat profiles of the same
-    # input reuse the collected row(s) instead of re-running the scan+agg
-    # job, and schema_suggestions peeks the same entry (memo.agg_row_peek)
     row: dict = {}
     for chunk in chunks:
         r = data_memoized(ROWS, df,
                           ("profile", tuple(f.name for _, f, _ in chunk)),
                           lambda: _aggregate(df, chunk).collect()[0])
         row.update(r.asDict())
+    return row
+
+
+def profile(df: DataFrame) -> DataFrame:
+    """Profile every column of ``df`` in one aggregation pass.
+
+    The table aggregate (``_table_row``) is melted into a local
+    relation, one row per column, and ``moments.finish`` — the same
+    finish as the windowed and grouped profiles — derives D1-D10 and
+    renders them with sig6 as SQL expressions over it. Spark's
+    ConvertToLocalRelation rule evaluates those projections, and a
+    consumer's filter and projection (jb_report), while it optimizes the
+    plan: collecting the result runs no Spark job and compiles no code.
+    (Inside the aggregate plan, the per-column derived trees would cost
+    seconds of janino compilation and blow the 64KB codegen limit.)
+
+    Returns a long-format DataFrame, one row per column, schema
+    ``PROFILE_FIELDS``.
+    """
+    fields = df.schema.fields
+    row = _table_row(df)
 
     # melt the row into one raw-slot record per column (double_count is the
     # float_count slot: both are the Java-strict float parse)
@@ -206,7 +212,10 @@ def profile(df: DataFrame, columns: list[str] | None = None,
 
 
 def complete_row_count(df: DataFrame) -> DataFrame:
-    """A16: count of rows with every field non-null and non-blank."""
-    complete = completeness_expr(df)
-    return df.selectExpr("count(1) AS row_count",
-                         f"count_if({complete}) AS complete_count")
+    """A16: (row_count, complete_count), the rows with every field
+    non-null and non-blank, read from the table aggregate. A one-row
+    local relation: collecting it runs no Spark job."""
+    row = _table_row(df)
+    return df.sparkSession.sql(
+        f"VALUES ({row['row_count']}L, {row['complete_count']}L) "
+        "AS t(row_count, complete_count)")

@@ -873,6 +873,10 @@ def test_empty_input_graceful(spark):
     p = {r["column"]: r for r in prof.profile(empty).collect()}
     assert set(p) == {"doc_id", "text", "x"}
     assert p["x"]["row_count"] == 0 and p["x"]["mean"] is None
+    assert tuple(prof.complete_row_count(empty).collect()[0]) == (0, 0)
+    # a frame without columns: every row is complete
+    assert tuple(prof.complete_row_count(
+        spark.range(3).select()).collect()[0]) == (3, 3)
     assert topk.topk_tokens(empty).count() == 0
     assert dedup.exact_dedup(empty).count() == 0
     assert dedup.minhash_signatures(empty).count() == 0

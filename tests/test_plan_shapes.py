@@ -53,12 +53,19 @@ def test_topk_pruned_scan_and_group_limit(spark):
 
 
 def test_completeness_single_agg(spark):
-    """Completeness is one filterless agg pass (count + count_if), not a
-    filter+count second job."""
+    """Completeness is one more count_if slot of the profile's one
+    aggregate pass, not a filter+count or a second scan."""
     li = load_table(spark, SF_DIR, "lineitem")
-    plan = _formatted_plan(prof.complete_row_count(li))
+    chunk = [(i, f, prof._column_slots(i, f))
+             for i, f in enumerate(li.schema.fields)]
+    agg = prof._aggregate(li, chunk)
+    assert "complete_count" in agg.columns
+    plan = _formatted_plan(agg)
     assert plan.count("Scan parquet") == 2    # one scan (listed twice)
     assert plan.count("Exchange") == 2        # one exchange (single row)
+    import re
+    nodes = re.findall(r"^\(\d+\) ([A-Za-z ]+\w)", plan, re.M)
+    assert "Filter" not in nodes, nodes
 
 
 def test_sampling_ops_narrow(spark):
@@ -636,13 +643,14 @@ def test_embedding_neardup_block_memo_single_scan_derivation(spark):
     """VERDICT r11 #2: the num_blocks derivation is ONE aggregate (not
     count()+first()), memoized — a repeat call reads the memo, no job."""
     from flink_descriptive_stats_spark.functions.memo import (
-        agg_row_peek, clear_all_memos)
+        ROWS, clear_all_memos, data_key)
     from flink_descriptive_stats_spark.operators import dedup as DD
     from flink_descriptive_stats_spark.operators.similarity import \
         with_norm
     clear_all_memos()
     emb = load_table(spark, SF_DIR, "embeddings")
     DD.embedding_near_dup_pairs(emb)
-    row = agg_row_peek(with_norm(emb, "vec_id", "embedding"),
-                       ("embedding_near_dup_blocks",))
+    d = with_norm(emb, "vec_id", "embedding")
+    row = ROWS.peek(d.sparkSession,
+                    data_key(d, ("embedding_near_dup_blocks",)))
     assert row is not None and int(row["n"]) > 0 and int(row["dim"]) > 0

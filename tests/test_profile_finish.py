@@ -8,8 +8,10 @@ import datetime as dt
 import numpy as np
 from pyspark.sql import types as T
 
+from flink_descriptive_stats_spark.operators import moments
 from flink_descriptive_stats_spark.operators.extras import schema_suggestions
-from flink_descriptive_stats_spark.operators.profile import profile
+from flink_descriptive_stats_spark.operators.profile import (
+    complete_row_count, profile)
 from flink_descriptive_stats_spark.report import jb_report
 from flink_descriptive_stats_spark.streaming.profile_stream import (
     WINDOW_STATS, windowed_profile_multi)
@@ -31,7 +33,9 @@ def test_memoized_profile_and_jb_report_run_no_job(spark, tmp_path):
         prof = profile(df)
         rows = {r["column"]: r for r in prof.collect()}
         jb = jb_report(prof).collect()
-        # the lean type-suggestion aggregate peeks the same memoized row
+        # the completeness count and the type suggestions read the same
+        # memoized table aggregate
+        complete = complete_row_count(df).collect()
         suggestions = schema_suggestions(df).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)   # leave no group
@@ -43,7 +47,25 @@ def test_memoized_profile_and_jb_report_run_no_job(spark, tmp_path):
     assert rows["x"]["mean"] == "4166667e-6"
     assert rows["s"]["float_count"] == rows["s"]["double_count"] == 1
     assert [r["column"] for r in jb] == ["x"]
+    assert [tuple(r) for r in complete] == [(4, 2)]
     assert [(r["column"], r["n_non_null"]) for r in suggestions] == [("s", 3)]
+
+
+def test_profile_state_collects_without_job(spark):
+    """profile_state runs its aggregate when built and returns a local
+    relation built from Arrow: collecting the state runs no Spark job."""
+    df = spark.createDataFrame([(1.0,), (2.5,), (None,)], "x double")
+    state = moments.profile_state(df, ["x"])
+
+    sc = spark.sparkContext
+    sc.setJobGroup("profile-state-collect", "collect a profile state")
+    try:
+        rows = state.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)   # leave no group
+    assert sc.statusTracker().getJobIdsForGroup("profile-state-collect") == []
+    assert [(r["column"], r["n"], r["mean"]) for r in rows] == [
+        ("x", 2, 1.75)]
 
 
 def test_batch_and_windowed_profiles_agree(spark):
@@ -65,7 +87,7 @@ def test_batch_and_windowed_profiles_agree(spark):
         + [T.StructField(c, T.DoubleType()) for c in cols])
     df = spark.createDataFrame(rows, schema)
 
-    batch = {r["column"]: r for r in profile(df, list(cols)).collect()}
+    batch = {r["column"]: r for r in profile(df.select(*cols)).collect()}
     win = windowed_profile_multi(df, value_cols=list(cols), window="1 day")
     win = {r["column"]: r for r in win.collect()}
     assert set(batch) == set(win) == set(cols)
@@ -90,7 +112,7 @@ def test_nan_column_derived_stats_are_null(spark):
         [(t0 + dt.timedelta(minutes=i), v)
          for i, v in enumerate([1.0, float("nan"), 3.0])], schema)
 
-    batch = profile(df, ["x"]).collect()[0]
+    batch = profile(df.select("x")).collect()[0]
     win = windowed_profile_multi(df, value_cols=["x"],
                                  window="1 day").collect()[0]
     assert batch["numeric_count"] == win["numeric_count"] == 3

@@ -274,7 +274,7 @@ def test_embedding_neardup_block_derivation_one_job_then_memo(spark):
     aggregate, memoized per (session, plan) — a repeat call runs zero
     derivation jobs."""
     from flink_descriptive_stats_spark.functions.memo import (
-        agg_row_peek, clear_all_memos)
+        ROWS, clear_all_memos, data_key)
     from flink_descriptive_stats_spark.operators.dedup import \
         embedding_near_dup_pairs
     from flink_descriptive_stats_spark.operators.similarity import \
@@ -284,8 +284,8 @@ def test_embedding_neardup_block_derivation_one_job_then_memo(spark):
         [(i, [float(i % 3), 1.0, float(i % 5)]) for i in range(20)],
         "vec_id bigint, embedding array<double>")
     d = with_norm(df, "vec_id", "embedding")
-    tag = ("embedding_near_dup_blocks",)
-    assert agg_row_peek(d, tag) is None
+    key = data_key(d, ("embedding_near_dup_blocks",))
+    assert ROWS.peek(d.sparkSession, key) is None
     sc = spark.sparkContext
     st = sc.statusTracker()
     sc.setJobGroup("edp-first", "derivation")
@@ -294,7 +294,7 @@ def test_embedding_neardup_block_derivation_one_job_then_memo(spark):
     # ONE collect action (AQE may split its shuffle into a second job);
     # the pre-fix count()+first() pair cost three jobs under AQE
     assert len(first_jobs) <= 2, first_jobs
-    row = agg_row_peek(d, tag)
+    row = ROWS.peek(d.sparkSession, key)
     assert row is not None and int(row["n"]) == 20 and int(
         row["dim"]) == 3
     sc.setJobGroup("edp-repeat", "memo hit")

@@ -400,17 +400,19 @@ def test_profile_wide_frame_single_pass(spark):
                                                 int(lens.max()))
 
 
-def test_profile_chunked_equals_single_pass(spark):
-    """Past max_exprs_per_pass the profile falls back to column-chunked
+def test_profile_chunked_equals_single_pass(spark, monkeypatch):
+    """Past MAX_EXPRS_PER_PASS the profile falls back to column-chunked
     aggregation passes; the per-column aggregates are independent, so
     the chunked result must equal the single-pass result EXACTLY —
     forced here with a tiny chunk budget over a mixed-type table."""
     from flink_descriptive_stats_spark.operators import profile as prof
     li = load_table(spark, SF_DIR, "lineitem")
     single = sorted(map(tuple, prof.profile(li).collect()))
-    chunked = sorted(map(tuple, prof.profile(
-        li, max_exprs_per_pass=25).collect()))
+    whole = tuple(prof.complete_row_count(li).collect()[0])
+    monkeypatch.setattr(prof, "MAX_EXPRS_PER_PASS", 25)
+    chunked = sorted(map(tuple, prof.profile(li).collect()))
     assert single == chunked
+    assert tuple(prof.complete_row_count(li).collect()[0]) == whole
 
 
 # ---------------------------------------------------------------- decimal
