@@ -1,13 +1,14 @@
 """Per-process memo shared by the operators.
 
-Several operators end in "collect ONE row of aggregates, post-process
-driver-side" (profile, quantiles, outlier fences, distinct counts); others
-build a Column, read a parquet footer, train a model or label near-duplicate
-clusters. When a second query needs the same result over the
-same input — complete_row_count and schema_suggestions after profile, all
-three reading the one table aggregate, or a repeat profile of an unchanged
-file — that work is pure repeat. One ``Memo`` class serves every kind: a
-bounded LRU dict under one lock, one instance per kind of value.
+Several operators end in "collect ONE result, post-process driver-side"
+(profile, top-K, quantiles, outlier fences, distinct counts); others
+build a Column, read a parquet footer, train a model or label
+near-duplicate clusters. When a second query needs the same result over
+the same input — complete_row_count and schema_suggestions after profile,
+all three reading the one table aggregate, or a repeat profile request of
+an unchanged file, whose profile, top-K and footer schema are all served
+from here — that work is pure repeat. One ``Memo`` class serves every
+kind: a bounded LRU dict under one lock, one instance per kind of value.
 
 Each entry belongs to a session (data, schemas) or to the SparkContext
 (Columns), held by weakref, so it is never served to a new
@@ -85,7 +86,9 @@ class Memo:
         return [v for ref, v in entries if ref() is not None]
 
 
-ROWS = Memo(128)        # collected aggregate rows
+#: collected results: aggregate rows, the top-K's Arrow table and the
+#: finished profile relation built from the table aggregate
+ROWS = Memo(128)
 #: built Columns (one py4j round trip per node; SQL text needs no memo):
 #: the F2 pandas-UDF length (functions.scalar) and operators.text's bundles
 EXPRS = Memo(512)
@@ -110,15 +113,23 @@ def clear_all_memos() -> None:
             pass            # session already stopped; blocks died with it
 
 
+def local_path(p: str) -> str | None:
+    """The local file-system path of ``p``, a path or a ``file:`` URI;
+    None for any other URI."""
+    u = urlparse(p)
+    if u.scheme not in ("", "file"):
+        return None
+    return unquote(u.path) if u.scheme else p
+
+
 def files_identity(paths) -> tuple | None:
     """Sorted (path, size, mtime_ns) of every file at or under each path;
     None if a path is a non-``file:`` URI or does not exist."""
     files = []
     for p in paths:
-        u = urlparse(p)
-        if u.scheme not in ("", "file"):
+        p = local_path(p)
+        if p is None:
             return None
-        p = unquote(u.path) if u.scheme else p
         if os.path.isdir(p):
             files += [os.path.join(root, n)
                       for root, _, names in os.walk(p) for n in names]

@@ -134,13 +134,10 @@ def _aggregate(df: DataFrame, chunk: list) -> DataFrame:
     return src.selectExpr(*head, *[e for _, _, exprs in chunk for e in exprs])
 
 
-def _table_row(df: DataFrame) -> dict:
-    """The table aggregate of ``df``, read by ``profile``,
-    ``complete_row_count`` and ``extras.schema_suggestions``:
-    ``row_count``, ``complete_count`` and column i's slots as
-    ``c{i}__<slot>``. One Spark job per chunk of MAX_EXPRS_PER_PASS slots,
-    memoized on ``df`` per chunk; the aggregates are per-column
-    independent, so chunked == single-pass exactly (pytest-pinned)."""
+def _chunks(df: DataFrame) -> list[list]:
+    """``df``'s columns as (index, field, slots), cut into the chunks of
+    at most MAX_EXPRS_PER_PASS slots that ``_aggregate`` runs; a frame
+    without columns is one empty chunk."""
     chunks: list[list] = []
     cur: list = []
     cur_n = 1
@@ -151,12 +148,26 @@ def _table_row(df: DataFrame) -> dict:
             cur, cur_n = [], 1
         cur.append((i, f, slots))
         cur_n += len(slots)
-    chunks.append(cur)          # also the empty-schema single chunk
+    chunks.append(cur)
+    return chunks
 
+
+def _layout(chunks: list[list]) -> tuple:
+    """The column names of each chunk: the memo tags of the passes."""
+    return tuple(tuple(f.name for _, f, _ in chunk) for chunk in chunks)
+
+
+def _table_row(df: DataFrame, chunks: list[list] | None = None) -> dict:
+    """The table aggregate of ``df``, read by ``profile``,
+    ``complete_row_count`` and ``extras.schema_suggestions``:
+    ``row_count``, ``complete_count`` and column i's slots as
+    ``c{i}__<slot>``. One Spark job per chunk (``_chunks``), memoized on
+    ``df`` per chunk; the aggregates are per-column independent, so
+    chunked == single-pass exactly (pytest-pinned)."""
+    chunks = _chunks(df) if chunks is None else chunks
     row: dict = {}
-    for chunk in chunks:
-        r = data_memoized(ROWS, df,
-                          ("profile", tuple(f.name for _, f, _ in chunk)),
+    for chunk, names in zip(chunks, _layout(chunks)):
+        r = data_memoized(ROWS, df, ("profile", names),
                           lambda: _aggregate(df, chunk).collect()[0])
         row.update(r.asDict())
     return row
@@ -175,16 +186,24 @@ def profile(df: DataFrame) -> DataFrame:
     (Inside the aggregate plan, the per-column derived trees would cost
     seconds of janino compilation and blow the 64KB codegen limit.)
 
+    The finished relation is memoized on ``df`` and its chunk layout, so
+    a repeat over an unchanged input neither aggregates nor parses the
+    finish again.
+
     Returns a long-format DataFrame, one row per column, schema
     ``PROFILE_FIELDS``.
     """
-    fields = df.schema.fields
-    row = _table_row(df)
+    chunks = _chunks(df)
+    return data_memoized(ROWS, df, ("profile_result", _layout(chunks)),
+                         lambda: _finish(df, _table_row(df, chunks)))
 
-    # melt the row into one raw-slot record per column (double_count is the
-    # float_count slot: both are the Java-strict float parse)
+
+def _finish(df: DataFrame, row: dict) -> DataFrame:
+    """The table aggregate ``row`` melted into one raw-slot record per
+    column (double_count is the float_count slot: both are the
+    Java-strict float parse), a local relation under ``moments.finish``."""
     recs = []
-    for i, f in enumerate(fields):
+    for i, f in enumerate(df.schema.fields):
         p = f"c{i}__"
         has_numeric = f"{p}n" in row          # which slots the bundle has
         has_len = f"{p}min_len" in row

@@ -2,9 +2,9 @@
 
 Reference shape: per string column, TWO serial sub-pipelines (word + pattern)
 each doing groupBy -> global sort at parallelism 1 -> first(20)
-(ProfileJob.java:183-216) — the declared bottleneck (BASELINE.md). Our shape
-is ONE scan and ONE multiplexed job for ALL string columns and BOTH token
-kinds:
+(ProfileJob.java:183-216) — the declared bottleneck (BASELINE.md). Our plan
+(``_topk_plan``) is ONE scan and one grouped shuffle for ALL string columns
+and BOTH token kinds:
 
   explode (kind, column, token) structs    <- two per string column:
                                               the value and its pattern
@@ -14,16 +14,22 @@ kinds:
   row_number window over (kind, column)    <- planned with WindowGroupLimit
                                               (Partial) BEFORE the exchange
 
+``topk_tokens`` collects that plan's ranked rows once per input, memoized
+in ``functions.memo.ROWS`` like the profile's table aggregate, and returns
+them as a local relation: a repeat over an unchanged input runs no Spark
+job, and a file rewritten at the same path is a miss.
+
 Scale reasoning (100 TB): the grouped-count shuffle is unavoidable and keyed
 by (kind, column, token) — high cardinality, no skew. The final window over
 (kind, column) looks like a single-task funnel, but Spark >= 3.5 plans a
 rank-limit pushdown (`WindowGroupLimit` in Partial mode before the
 exchange), so each upstream partition forwards at most K rows per
 (kind, column) — the funnel task sees O(K * partitions), independent of
-input size. (A manual salted two-level window achieves the same bound at
-the cost of one extra full shuffle — verified equivalent and removed.)
-Ties broken (count desc, token asc) for determinism — the reference's tie
-order is nondeterministic (SURVEY.md §2.6 item 6).
+input size; the collected result is at most 2 * K rows per string column.
+(A manual salted two-level window achieves the same bound at the cost of
+one extra full shuffle — verified equivalent and removed.) Ties broken
+(count desc, token asc) for determinism — the reference's tie order is
+nondeterministic (SURVEY.md §2.6 item 6).
 """
 
 from __future__ import annotations
@@ -33,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_descriptive_stats_spark.functions import scalar
+from flink_descriptive_stats_spark.functions.memo import ROWS, data_memoized
 
 
 def string_columns(df: DataFrame) -> list[str]:
@@ -44,11 +51,19 @@ def topk_tokens(df: DataFrame, columns: list[str] | None = None,
                 k: int = 20) -> DataFrame:
     """Top-K frequent values (kind='value') and character patterns
     (kind='pattern') per string column. Output: (kind, column, token, cnt,
-    rank), rank 1-based by (cnt desc, token asc)."""
+    rank), rank 1-based by (cnt desc, token asc). The ranked rows are
+    collected once per input (memoized) and returned as a local relation."""
     cols = columns or string_columns(df)
     if not cols:
         raise ValueError("no string columns to profile")
+    top = data_memoized(ROWS, df, ("topk", tuple(cols), k),
+                        lambda: _topk_plan(df, cols, k).toArrow())
+    return df.sparkSession.createDataFrame(top)
 
+
+def _topk_plan(df: DataFrame, cols: list[str], k: int) -> DataFrame:
+    """The top-K plan that ``topk_tokens`` collects: one explode of both
+    token kinds, one grouped count, the ranked funnel."""
     melted = (df.selectExpr(_melt(cols))
               .where("token IS NOT NULL"))          # P3: null filter
     counts = melted.groupBy("kind", "column", "token").agg(

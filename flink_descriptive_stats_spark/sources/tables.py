@@ -11,25 +11,81 @@ micros matches DuckDB's ns->ms truncation for the epoch-millis stats space.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from flink_descriptive_stats_spark.functions.memo import (SCHEMAS,
-                                                          files_identity)
+from flink_descriptive_stats_spark.functions.memo import (
+    SCHEMAS, files_identity, local_path)
 from flink_descriptive_stats_spark.functions.scalar import ident
 
 
 def _parquet_schema(spark: SparkSession, path: str) -> T.StructType:
-    """The parquet footer schema at ``path``, memoized per (session, files
-    under the path). ``spark.read.parquet`` without a schema launches a
-    footer-inference Spark job on EVERY call; passing the memoized schema
-    to ``spark.read.schema(...)`` skips it. Only the schema (metadata, what
-    a catalog provides at scale) is reused; the file listing stays fresh
-    per call, and a rewritten file is a new key."""
+    """The parquet schema at ``path``, memoized per (session, files under
+    the path): passing it to ``spark.read.schema(...)`` skips Spark's
+    footer-inference job. The file listing stays fresh per call, and a
+    rewritten file is a new key.
+
+    The schema is read on the driver, with Spark's own code: the footer
+    of the file Spark's inference picks (``_footer_file``), converted by
+    ``ParquetFileFormat.readSchemaFromFooter`` under the session's conf,
+    so it runs no Spark job. With no such file, an input behind a
+    non-``file:`` URI, or ``spark.sql.parquet.mergeSchema`` on, Spark's
+    inference (``spark.read.parquet(path).schema``) reads it instead."""
     ident = files_identity([path])
-    return SCHEMAS.get(spark, None if ident is None else (path, ident),
-                       lambda: spark.read.parquet(path).schema)
+
+    def read() -> T.StructType:
+        footer = _footer_file(path, ident)
+        if footer is None or spark.conf.get(
+                "spark.sql.parquet.mergeSchema", "false").lower() == "true":
+            return spark.read.parquet(path).schema
+        jvm, state = spark._jvm, spark._jsparkSession.sessionState()
+        jpath = jvm.org.apache.hadoop.fs.Path("file:" + footer)
+        meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            state.newHadoopConf(), jpath, jvm.org.apache.parquet.format
+            .converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+        schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(jpath, meta),
+            parquet.ParquetToSparkSchemaConverter(state.conf()))
+        return T._parse_datatype_json_string(schema.json())
+
+    return SCHEMAS.get(spark, None if ident is None else (path, ident), read)
+
+
+def _footer_file(path: str, ident: tuple | None) -> str | None:
+    """The absolute path of the file whose footer Spark's schema inference
+    reads at ``path`` (``files_identity`` lists its files): the file
+    itself, else ``_common_metadata``, then ``_metadata``, then the first
+    data file by sorted path. As in Spark's file listing, a name below
+    ``path`` that starts with ``_`` (but is not a partition directory
+    ``_k=v``) or ``.`` is hidden."""
+    if not ident:
+        return None
+    local = local_path(path)
+    if os.path.isfile(local):
+        return os.path.abspath(local)
+    data, summaries = [], {}
+    for f, _, _ in ident:
+        *dirs, name = os.path.relpath(f, local).split(os.sep)
+        if any(_hidden(d) for d in dirs):
+            continue
+        if name in ("_common_metadata", "_metadata"):
+            summaries.setdefault(name, f)
+        elif not _hidden(name):
+            data.append(f)
+    for f in (summaries.get("_common_metadata"), summaries.get("_metadata"),
+              *data[:1]):
+        if f is not None:
+            return os.path.abspath(f)
+    return None
+
+
+def _hidden(name: str) -> bool:
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
 
 
 def normalize_table(df: DataFrame, table: str) -> DataFrame:
@@ -85,7 +141,7 @@ def stream_table(spark: SparkSession, src_dir: str, table: str,
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = schema if schema is not None \
-        else spark.read.parquet(src_dir).schema
+        else _parquet_schema(spark, src_dir)
     reader = spark.readStream.schema(raw_schema)
     for k, v in reader_options.items():
         reader = reader.option(k, v)

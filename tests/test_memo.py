@@ -54,6 +54,31 @@ def test_rewritten_file_is_not_served_stale(spark, tmp_path):
         5, sig6_py(3.0))
 
 
+def test_rewritten_file_is_a_topk_miss(spark, tmp_path):
+    from flink_descriptive_stats_spark.operators.topk import topk_tokens
+    from flink_descriptive_stats_spark.sources.tables import load_table
+
+    def top(df):
+        return sorted((r["kind"], r["token"], r["cnt"])
+                      for r in topk_tokens(df, k=1).collect())
+
+    path = tmp_path / "t.parquet"
+    _write_parquet(path, s=["a", "a", "b"])
+    assert top(load_table(spark, str(tmp_path), "t")) == [
+        ("pattern", "a", 3), ("value", "a", 2)]
+    sc = spark.sparkContext
+    sc.setJobGroup("topk-repeat", "top-K of an unchanged file")
+    try:
+        again = top(load_table(spark, str(tmp_path), "t"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)   # leave no group
+    assert sc.statusTracker().getJobIdsForGroup("topk-repeat") == []
+    assert again == [("pattern", "a", 3), ("value", "a", 2)]
+    _write_parquet(path, s=["b", "b", "b", "a"])  # same path, new contents
+    assert top(load_table(spark, str(tmp_path), "t")) == [
+        ("pattern", "a", 4), ("value", "b", 3)]
+
+
 def test_rewritten_file_schema_is_not_served_stale(spark, tmp_path):
     from flink_descriptive_stats_spark.sources.tables import load_table
     path = tmp_path / "t.parquet"

@@ -33,13 +33,14 @@ def test_profile_agg_single_pass(spark):
 
 
 def test_topk_pruned_scan_and_group_limit(spark):
-    """Top-K invariants: ONE parquet scan (both token kinds come from one
-    explode, not a union of two branches), reading ONLY the string
-    columns (column pruning reaches the reader), with no input
-    repartition ahead of it, and WindowGroupLimit bounds the final
-    window's input (rank-limit pushdown, the no-salting rationale)."""
+    """Invariants of the plan topk_tokens collects: ONE parquet scan
+    (both token kinds come from one explode, not a union of two
+    branches), reading ONLY the string columns (column pruning reaches
+    the reader), with no input repartition ahead of it, and
+    WindowGroupLimit bounds the final window's input (rank-limit
+    pushdown, the no-salting rationale)."""
     li = load_table(spark, SF_DIR, "lineitem")
-    plan = _formatted_plan(topk.topk_tokens(li))
+    plan = _formatted_plan(topk._topk_plan(li, topk.string_columns(li), 20))
     import re
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m, plan

@@ -10,7 +10,8 @@ from pyspark.sql import types as T
 from flink_descriptive_stats_spark.operators.extras import schema_suggestions
 from flink_descriptive_stats_spark.operators.profile import (
     complete_row_count, profile)
-from flink_descriptive_stats_spark.operators.topk import topk_tokens
+from flink_descriptive_stats_spark.operators.topk import (
+    _topk_plan, string_columns, topk_tokens)
 from flink_descriptive_stats_spark.report import jb_report
 from flink_descriptive_stats_spark.streaming.profile_stream import (
     windowed_profile_multi)
@@ -119,6 +120,8 @@ def test_profile_family_py4j_budget(spark, tmp_path):
         "complete_row_count": (
             lambda: complete_row_count(cust).collect(), 20),
         "topk_tokens": (lambda: topk_tokens(cust), 50),
+        "_topk_plan": (
+            lambda: _topk_plan(cust, string_columns(cust), 20), 50),
         "windowed_profile_multi": (windowed, 200),
     }
     for name, (fn, bound) in budget.items():

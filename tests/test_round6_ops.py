@@ -410,7 +410,14 @@ def test_profile_chunked_equals_single_pass(spark, monkeypatch):
     single = sorted(map(tuple, prof.profile(li).collect()))
     whole = tuple(prof.complete_row_count(li).collect()[0])
     monkeypatch.setattr(prof, "MAX_EXPRS_PER_PASS", 25)
-    chunked = sorted(map(tuple, prof.profile(li).collect()))
+    sc = spark.sparkContext
+    sc.setJobGroup("profile-chunked", "chunked profile")
+    try:
+        chunked = sorted(map(tuple, prof.profile(li).collect()))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)   # leave no group
+    # the chunked passes ran: the single-pass result was not served
+    assert len(sc.statusTracker().getJobIdsForGroup("profile-chunked")) > 1
     assert single == chunked
     assert tuple(prof.complete_row_count(li).collect()[0]) == whole
 

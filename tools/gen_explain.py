@@ -47,10 +47,11 @@ def main() -> None:
 
     sections.append((
         "Top-K values + patterns (multiplexed)",
-        "Scan reads ONLY the string columns (ReadSchema pruning); Partial\n"
+        "`_topk_plan`, which `topk_tokens` collects once per input. Scan "
+        "reads ONLY\nthe string columns (ReadSchema pruning); Partial\n"
         "WindowGroupLimit bounds each window's input BEFORE the exchange — "
         "the\nno-salting design.",
-        fmt(spark, topk.topk_tokens(li))))
+        fmt(spark, topk._topk_plan(li, topk.string_columns(li), 20))))
 
     ev = load_table(spark, SF, "events").select(
         "event_id", "ts", "user_id", "event_type", "value")
